@@ -542,8 +542,9 @@ def q_trailing_zscore_events(spark, sf_dir):
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: the single-pass per-partition summary (scale mode —
-    HLL distinct + sketch quantiles) over lineitem at sf0.001."""
+    """Flagship: the per-partition summary in scale mode (sketch
+    quantiles; distinct counts from the occurrence pass) over lineitem
+    at sf0.001."""
     df = _t(spark, "/root/testdata/sf0.001", "lineitem")
     s = summarize(
         df,

@@ -1,15 +1,10 @@
-"""Statistic expression builders — the per-column aggregate vocabulary.
-
-Every statistic is a JVM-side Catalyst expression (whole-stage codegen,
-map-side partial aggregation); nothing here drops into Python. The six
-gate statistics (reference: gate/statistics.py:12-49) plus north-rule
-extras (stddev, null_fraction, count, min, max).
+"""The statistic vocabulary: the six gate statistics (reference:
+gate/statistics.py:12-49) plus north-rule extras (stddev,
+null_fraction, count, min, max), and which apply to which type class.
+summarize() builds the aggregates that compute them.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # gate's statistic set, in gate's (alphabetical) output order
 # (reference: gate/summary.py:264-277, tests/test_summary.py:19-54).
@@ -46,45 +41,3 @@ EXTRA_BY_TYPE = {
     "array": ["count", "max", "min", "null_fraction", "stddev"],
 }
 
-
-def coverage(c: Column) -> Column:
-    """Fraction of non-null rows (reference: gate/summary.py:208-215)."""
-    return F.avg(c.isNotNull().cast("double"))
-
-
-def null_fraction(c: Column) -> Column:
-    return F.avg(c.isNull().cast("double"))
-
-
-def mean(c: Column) -> Column:
-    """avg accumulates in double; emitted value is float32-cast downstream
-    (reference casts to Float32 before mean — gate/summary.py:216-223 —
-    differences are below f32 output precision)."""
-    return F.avg(c.cast("double"))
-
-
-def stddev(c: Column) -> Column:
-    return F.stddev_samp(c.cast("double"))
-
-
-def approx_distinct(c: Column, rsd: float = 0.02) -> Column:
-    """HyperLogLog — mergeable, scale default
-    (reference: polars approx_unique, gate/summary.py:232-239)."""
-    return F.approx_count_distinct(c, rsd)
-
-
-def exact_distinct(c: Column) -> Column:
-    return F.count_distinct(c)
-
-
-def approx_quantiles(c: Column, qs: list[float], accuracy: int = 10000) -> Column:
-    """GK-sketch quantiles — mergeable, rank-based (returns actual data
-    values), scale default (reference: polars quantile nearest-rank,
-    gate/summary.py:224-231, 250-257)."""
-    return F.percentile_approx(c.cast("double"), F.array(*[F.lit(q) for q in qs]), accuracy)
-
-
-def exact_quantiles_linear(c: Column, qs: list[float]) -> Column:
-    """Exact linear-interpolation percentile — matches DuckDB
-    quantile_cont; used by oracle-gated correctness queries."""
-    return F.percentile(c.cast("double"), F.array(*[F.lit(q) for q in qs]))

@@ -14,6 +14,7 @@ Reference behaviors reproduced:
 - sklearn AgglomerativeClustering(average, precomputed)
                                 -> agglomerative_average (gate/drift.py:568-573)
 - sklearn cosine_similarity     -> cosine_similarity_matrix
+- pandas groupby z-score        -> zscore_groups       (gate/drift.py:475-502)
 """
 
 from __future__ import annotations
@@ -45,6 +46,20 @@ def knn_query(x: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
     order = np.argsort(d, axis=1, kind="stable")[:, :k]
     dists = np.take_along_axis(d, order, axis=1)
     return dists, order
+
+
+def zscore_groups(x: np.ndarray, codes: np.ndarray, eps: float) -> np.ndarray:
+    """Per-group z-score ``(x - mean) / (std + eps)`` with the sample
+    standard deviation (ddof=1, like pandas ``std``); ``codes`` holds
+    each value's group index in 0..G-1. A single-value group has no
+    standard deviation and yields NaN, like pandas."""
+    x = np.asarray(x, dtype=np.float64)
+    n = np.bincount(codes)
+    mean = np.bincount(codes, weights=x) / n
+    dev = x - mean[codes]
+    with np.errstate(invalid="ignore", divide="ignore"):
+        std = np.sqrt(np.bincount(codes, weights=dev * dev) / (n - 1))
+    return dev / (std[codes] + eps)
 
 
 def percentile_of_score(a: np.ndarray, score: float) -> float:

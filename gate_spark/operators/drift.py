@@ -2,10 +2,9 @@
 
 Pipeline (reference: gate/drift.py:328-472):
 
-1. z-score-normalize the stack of summaries per (column, statistic) —
-   a Spark window aggregate over the summary table (D5 mapping:
-   mean/stddev_samp include the current partition, +1e-10 on std,
-   ddof=1 like pandas ``std``);
+1. z-score-normalize the stack of summaries per (column, statistic)
+   (D5 mapping: mean/std include the current partition, +1e-10 on
+   std, ddof=1 like pandas ``std``);
 2. optionally cluster correlated columns and reduce |z| to cluster
    means (gate/drift.py:388-411);
 3. pivot to a (partition x feature) matrix, fillna(0) before and after
@@ -15,11 +14,11 @@ Pipeline (reference: gate/drift.py:328-472):
 5. verdict: drifted iff score >= 95th percentile of all *other*
    partitions' scores (gate/drift.py:107-126).
 
-Steps 1-2 run in Spark (the summary table can span years of
-partitions x thousands of columns); the pivoted matrix is
-metadata-scale (num_partitions x num_features) and is collected for
-the exact driver-side kNN, mirroring the reference's math bit-for-bit
-in float64.
+The summary table is metadata-scale (partitions x columns rows), so
+detect_drift collects it ONCE and runs steps 1-5 driver-side in float64
+(z-score: kernels.zscore_groups), mirroring the reference's math. The
+Spark ``normalize`` window below is the SQL-twin formulation behind
+``drifted_columns_df``, ``cluster_reduced_z`` and the oracle queries.
 """
 
 from __future__ import annotations
@@ -67,6 +66,31 @@ def normalize(summary_df: DataFrame, partition_key: str, statistics: list[str]) 
         (F.col("value") - F.avg("value").over(w))
         / (F.stddev_samp("value").over(w) + F.lit(Z_EPS)),
     )
+
+
+def zscore_summary(pdf: pd.DataFrame, pk: str, statistics: list[str]) -> pd.DataFrame:
+    """Collected wide summary -> (partition, column, statistic, value)
+    with nulls dropped and each (column, statistic) group z-scored —
+    the driver-side twin of :func:`normalize`."""
+    melted = pdf.melt(
+        id_vars=[pk, "column"],
+        value_vars=statistics,
+        var_name="statistic",
+        value_name="value",
+    ).dropna(subset=["value"])
+    codes = melted.groupby(["column", "statistic"], sort=False).ngroup().to_numpy()
+    melted["value"] = kernels.zscore_groups(
+        melted["value"].to_numpy(dtype=np.float64), codes, Z_EPS
+    )
+    return melted.reset_index(drop=True)
+
+
+def _ordered_partitions(keys: pd.Series) -> list:
+    """Distinct partition keys in Spark ``orderBy`` order (ascending,
+    null first)."""
+    vals = keys.drop_duplicates().tolist()
+    present = [v for v in vals if not pd.isna(v)]
+    return [None] * (len(present) < len(vals)) + sorted(present)
 
 
 class DriftResult:
@@ -268,7 +292,9 @@ def detect_drift(
     the last W partitions before the current one (the reference always
     uses all history).
     """
-    partitions = summary.partitions()
+    pk = summary.partition_key
+    pdf = summary.df.toPandas()
+    partitions = _ordered_partitions(pdf[pk])
     if current_partition is None:
         current_partition = partitions[-1]
     if current_partition not in partitions:
@@ -292,19 +318,10 @@ def detect_drift(
         previous = [p for p, v in zip(previous, validity) if v == 1]
 
     keep = previous + [current_partition]
-    sdf = summary.df.where(F.col(summary.partition_key).isin(keep))
-
-    statistics = summary.statistics()
-    normalized = normalize(sdf, summary.partition_key, statistics)
+    norm_pdf = zscore_summary(pdf[pdf[pk].isin(keep)], pk, summary.statistics())
 
     columns = summary.columns
     do_cluster = cluster and len(columns) >= CLUSTER_MIN_COLUMNS
-
-    # The normalized summary table is metadata-scale
-    # (partitions x columns x stats rows) — collect for the exact
-    # driver-side pipeline, as the reference does (gate/drift.py:413-444).
-    norm_pdf = normalized.toPandas()
-    pk = summary.partition_key
 
     clustering_df = None
     clustered_features = None
@@ -381,10 +398,9 @@ def drift_scores(summary: Summary, k: int = 3) -> DataFrame:
     The summary table is metadata-scale (partitions x columns rows), so
     the whole computation — melt, z-score, pivot, kNN, percentile —
     runs driver-side on ONE collect of the (persisted) summary
-    (:func:`drift_scores_driver`; pinned equal to the Spark
-    ``normalize`` window formulation in tests). The previous Spark
-    z-scoring spent ~4 metadata-scale stages of scheduling latency per
-    call before the collect that was needed anyway.
+    (:func:`drift_scores_driver`). The previous Spark z-scoring spent
+    ~4 metadata-scale stages of scheduling latency per call before the
+    collect that was needed anyway.
     """
     return drift_scores_driver(summary, k=k)
 
@@ -398,12 +414,11 @@ def drift_scores_driver(
 ) -> DataFrame:
     """Driver-side fast path of :func:`drift_scores`: ONE collect of
     the (persisted, metadata-scale) summary table, then melt / z-score
-    / kNN / percentile entirely in pandas+numpy — numerically the same
-    float64 math as the Spark ``normalize`` window (pinned against
-    drift_scores in tests), but without ~4 extra metadata-scale Spark
-    stages of pure scheduling latency per validation pass. Use inside
-    orchestrated jobs (pipeline.validate_tokens); the Spark
-    formulation remains the oracle-gated surface.
+    / kNN / percentile entirely in pandas+numpy, with the z-score of
+    :func:`detect_drift` (:func:`zscore_summary`) — without ~4 extra
+    metadata-scale Spark stages of pure scheduling latency per
+    validation pass. Use inside orchestrated jobs
+    (pipeline.validate_tokens).
 
     ``history``: extra summary-format rows (pandas; same partition-key
     and column names) appended to the live summary before z-scoring —
@@ -426,17 +441,7 @@ def drift_scores_driver(
             [pdf[[pk, "column"] + statistics], history[[pk, "column"] + statistics]],
             ignore_index=True,
         )
-    melted = pdf.melt(
-        id_vars=[pk, "column"],
-        value_vars=statistics,
-        var_name="statistic",
-        value_name="value",
-    ).dropna(subset=["value"])
-    melted["value"] = melted["value"].astype(np.float64)
-    g = melted.groupby(["column", "statistic"])["value"]
-    melted["value"] = (melted["value"] - g.transform("mean")) / (
-        g.transform(lambda s: s.std(ddof=1)) + Z_EPS
-    )
+    melted = zscore_summary(pdf, pk, statistics)
     nn_features = (
         melted.fillna(0.0)
         .pivot_table(index=pk, columns=["column", "statistic"], values="value")

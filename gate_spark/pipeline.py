@@ -204,7 +204,7 @@ def validate_tokens(
       ``distribution`` / ``drift`` tables: their verdicts stand from
       the run that validated them.
     """
-    from gate_spark.operators.summarize import _qident, _qlit
+    from gate_spark.operators.summarize import _qident, _qlit, _sql_lit
 
     lo, hi = int(vocab[0]), int(vocab[1])
     tk = _qident(tokens_col)
@@ -222,13 +222,13 @@ def validate_tokens(
     f_vocab = (
         f"coalesce(((array_min({tk}) < {lo}) OR (array_max({tk}) >= {hi})), false)"
     )
-    if domain is not None:
-        in_list = ", ".join(
-            _qlit(d) if isinstance(d, str) else repr(d) for d in domain
-        )
-        f_member = f"(NOT coalesce({pk} IN ({in_list}), false))"
-    else:
+    if domain is None:
         f_member = "false"
+    elif len(domain) == 0:
+        f_member = "true"  # nothing is a member: every row violates
+    else:
+        in_list = ", ".join(_sql_lit(d) for d in domain)
+        f_member = f"(NOT coalesce({pk} IN ({in_list}), false))"
 
     # ONE scan: every array-derived value + flags + (conditional)
     # violation details; arrays never leave the scan stage.

@@ -23,7 +23,8 @@ def get_spark(
 
     ``cores`` defaults to $SPARK_GRAFT_CPUS or all local cores. Shuffle
     partitions default to the core count — on a real cluster this would
-    be ~2-3x total executor cores; AQE coalesces the rest.
+    be ~2-3x total executor cores; AQE coalesces the rest. The driver
+    heap is $SPARK_GRAFT_DRIVER_MEM, else :func:`default_driver_memory`.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 8
@@ -39,7 +40,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )
@@ -48,6 +52,24 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """55 % of the host's MemTotal as a JVM size, e.g. ``"8850m"``.
+
+    In local mode the driver JVM is the whole engine and shares the host
+    with the Python driver, its Arrow buffers and the Python workers: a
+    heap sized past the host gets the JVM OOM-killed (a fixed 24g heap
+    was, on a 15 GB host) instead of letting it collect garbage. Falls
+    back to 4g where MemTotal cannot be read."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{max(512, int(line.split()[1]) * 55 // 100 // 1024)}m"
+    except OSError:
+        pass
+    return "4g"
 
 
 def _local_input_stats(df) -> "tuple[int, int | None] | None":

@@ -147,3 +147,34 @@ def test_drifted_columns_df_matches_pandas(df_with_drift):
     for a, b in zip(got["z"], want["z-score"]):
         assert abs(a - b) < 1e-9
     s.unpersist()
+
+
+def test_detect_drift_is_one_job_over_the_cached_summary(df_with_drift):
+    """detect_drift collects the (persisted) summary once and does the
+    z-score / clustering / kNN driver-side: one Spark job."""
+    s = summarize(df_with_drift, columns=COLS3, partition_key="date")
+    s.df.count()  # materialize the cache
+    sc = s.df.sparkSession.sparkContext
+    sc.setJobGroup("detect_drift_jobs", "detect_drift")
+    try:
+        r = detect_drift(s, cluster=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("detect_drift_jobs")) == 1
+    assert r.is_drifted
+    s.unpersist()
+
+
+def test_partition_order_matches_spark_nulls_first(spark):
+    """Partitions are ordered like Spark's orderBy: ascending, null
+    first; the default current partition is the last one."""
+    import pandas as pd
+
+    from gate_spark.operators.drift import _ordered_partitions
+
+    keys = ["b", None, "a", "ä", "B", "b"]
+    spark_order = [
+        r[0] for r in spark.createDataFrame([(k,) for k in keys], "k string")
+        .select("k").distinct().orderBy("k").collect()
+    ]
+    assert _ordered_partitions(pd.Series(keys)) == spark_order

@@ -143,3 +143,60 @@ def test_metadata_frames_are_jvm_local_scans(result):
         plan = frame._jdf.queryExecution().executedPlan().toString()
         assert "LocalTableScan" in plan, (name, plan)
         assert "ExistingRDD" not in plan, (name, plan)
+
+
+def test_empty_domain_flags_every_row(spark):
+    """An empty source domain admits no partition: every row violates
+    membership (the generated SQL must not render ``IN ()``)."""
+    t = token_table(spark, 300, seed=3, num_partitions=2)
+    r = validate_tokens(t, domain=(), compute_drift=False)
+    v = r.verdicts.where(F.col("constraint") == "source_membership").toPandas()
+    assert (v["violation_count"] == v["row_count"]).all()
+    assert v["row_count"].sum() == 300
+    r.unpersist()
+
+
+def test_domain_literals_match_column_isin(spark):
+    """None, NaN, +/-inf, quotes and plain values in the domain render
+    as typed SQL literals: the membership verdicts equal the Column-API
+    ``isin`` over the same values, for a string and a double key."""
+    t = token_table(spark, 300, seed=3, num_partitions=2).withColumn(
+        "sid", F.expr("CAST(substr(source, 4) AS DOUBLE)")
+    )
+    for key, domain in (
+        ("source", ("src0", None, "it's", "src2")),
+        ("sid", (0.0, None, float("nan"), float("inf"), -float("inf"), 2)),
+    ):
+        r = validate_tokens(t, partition_key=key, domain=domain, compute_drift=False)
+        got = (
+            r.verdicts.where(F.col("constraint") == "source_membership")
+            .select("partition", "violation_count").toPandas()
+        )
+        member = F.coalesce(F.col(key).isin(list(domain)), F.lit(False))
+        want = (
+            t.groupBy(F.col(key).alias("partition"))
+            .agg(F.sum((~member).cast("long")).alias("violation_count"))
+            .toPandas()
+        )
+        as_dict = lambda pdf: {str(p): int(v) for p, v in pdf.values.tolist()}
+        assert as_dict(got) == as_dict(want), key
+        assert 0 < got["violation_count"].sum() < 300, key
+        r.unpersist()
+
+
+def test_sql_literals_match_column_lit(spark):
+    """_sql_lit renders each value with the type and value F.lit gives it."""
+    import datetime as dt
+    import math
+
+    from gate_spark.operators.summarize import _sql_lit
+
+    values = [None, True, 7, -(2**31), 2**40, 0.1, -2.5e300, float("nan"),
+              float("inf"), -float("inf"), "a'b\\c`", "ünï", dt.date(2024, 2, 29)]
+    one = spark.range(1)
+    for v in values:
+        a = one.selectExpr(f"{_sql_lit(v)} AS x")
+        b = one.select(F.lit(v).alias("x"))
+        assert a.schema["x"].dataType == b.schema["x"].dataType or v is None, v
+        x, y = a.first()["x"], b.first()["x"]
+        assert x == y or (isinstance(x, float) and math.isnan(x) and math.isnan(y)), v

@@ -206,14 +206,21 @@ def test_occ_value_modes_agree(documents):
     exact-distinct columns are always counted over exact values
     (_occ_distinct_side; ADVICE round 4)."""
     kw = dict(columns=["lang", "doc_id", "n_chars"], partition_key="source")
-    for dmode in ("approx", "exact"):
-        a = summarize(documents, distinct_mode=dmode, occ_value_mode="hash", **kw)
-        b = summarize(documents, distinct_mode=dmode, occ_value_mode="exact", **kw)
-        pa = a.value().sort_values(["source", "column"]).reset_index(drop=True)
-        pb = b.value().sort_values(["source", "column"]).reset_index(drop=True)
-        assert (pa["occurrence_ratio"].fillna(-1) == pb["occurrence_ratio"].fillna(-1)).all(), dmode
-        assert (pa["num_unique_values"].fillna(-1) == pb["num_unique_values"].fillna(-1)).all(), dmode
-        a.unpersist(); b.unpersist()
+    # nulls in the value columns: a null is no value under either key
+    with_nulls = documents.selectExpr(
+        "source", "IF(n_chars % 3 = 0, NULL, lang) AS lang",
+        "IF(n_chars % 5 = 0, NULL, doc_id) AS doc_id",
+        "IF(n_chars % 7 = 0, NULL, n_chars) AS n_chars",
+    )
+    for df in (documents, with_nulls):
+        for dmode in ("approx", "exact"):
+            a = summarize(df, distinct_mode=dmode, occ_value_mode="hash", **kw)
+            b = summarize(df, distinct_mode=dmode, occ_value_mode="exact", **kw)
+            pa = a.value().sort_values(["source", "column"]).reset_index(drop=True)
+            pb = b.value().sort_values(["source", "column"]).reset_index(drop=True)
+            assert (pa["occurrence_ratio"].fillna(-1) == pb["occurrence_ratio"].fillna(-1)).all(), dmode
+            assert (pa["num_unique_values"].fillna(-1) == pb["num_unique_values"].fillna(-1)).all(), dmode
+            a.unpersist(); b.unpersist()
 
 
 def test_shared_occ_quantile_pass_matches_split_paths(documents):
@@ -232,8 +239,97 @@ def test_shared_occ_quantile_pass_matches_split_paths(documents):
     b = summarize(documents, distinct_mode="exact", **kw)  # split paths
     pa = a.value().sort_values(["source", "column"]).reset_index(drop=True)
     pb = b.value().sort_values(["source", "column"]).reset_index(drop=True)
-    for c in ["occurrence_ratio", "p50", "p95", "coverage", "mean",
-              "count", "max", "min", "null_fraction", "stddev"]:
+    for c in ["occurrence_ratio", "num_unique_values", "p50", "p95",
+              "coverage", "mean", "count", "max", "min", "null_fraction",
+              "stddev"]:
         assert (pa[c].fillna(-1) == pb[c].fillna(-1)).all(), c
     a.unpersist()
     b.unpersist()
+
+
+def test_null_partition_key_keeps_side_statistics(spark):
+    """A null partition key is a partition like any other: the
+    side-pass statistics (occurrence_ratio, distinct count, value-keyed
+    quantiles) are joined back null-safely, in every mode."""
+    import pandas as pd
+
+    pdf = pd.DataFrame(
+        {
+            "p": [None, None, None, "a", "a"],
+            "i": [1, 1, 2, 5, 6],
+            "s": ["x", "x", "y", "z", None],
+        }
+    )
+    df = spark.createDataFrame(pdf, "p string, i long, s string")
+    for kw in (
+        dict(),
+        dict(distinct_mode="exact", quantile_mode="nearest"),
+        dict(quantile_mode="nearest"),
+        dict(skew_salt=2),
+    ):
+        s = summarize(df, columns=["i", "s"], partition_key="p", **kw)
+        got = {(r["p"], r["column"]): r for r in s.df.collect()}
+        assert got[(None, "i")]["occurrence_ratio"] == F32(2 / 3), kw
+        assert got[(None, "i")]["num_unique_values"] == 2.0, kw
+        assert got[(None, "i")]["p50"] == 1.0, kw
+        assert got[(None, "i")]["p95"] == 2.0, kw
+        assert got[(None, "s")]["occurrence_ratio"] == F32(2 / 3), kw
+        assert got[(None, "s")]["num_unique_values"] == 2.0, kw
+        assert got[("a", "s")]["num_unique_values"] == 1.0, kw
+        s.unpersist()
+
+
+def _mixed16(spark):
+    """16 columns in the perfbench gate_history mix: 4 float, 6 int,
+    4 string, 2 bool over 5 partitions."""
+    import pandas as pd
+
+    rng = np.random.RandomState(5)
+    n = 400
+    data = {"p": rng.choice(list("abcde"), n)}
+    for j in range(4):
+        data[f"f{j}"] = rng.normal(0, 1, n)
+        data[f"s{j}"] = rng.choice(["u", "v", "w", None], n)
+    for j in range(6):
+        data[f"i{j}"] = pd.array(
+            np.where(rng.rand(n) < 0.1, None, rng.randint(0, 30 * (j + 1), n)),
+            dtype="Int64",
+        )
+    for j in range(2):
+        data[f"b{j}"] = rng.rand(n) < 0.3
+    pdf = pd.DataFrame(data)
+    return pdf, spark.createDataFrame(pdf)
+
+
+def test_moments_pass_runs_under_codegen(spark):
+    """With the percentile digests in their own pass and no HLL, the
+    16-column-with-extras moments aggregate is a declarative
+    HashAggregate inside whole-stage codegen, and no HLL aggregate is
+    planned at all."""
+    pdf, df = _mixed16(spark)
+    s = summarize(df, columns=[c for c in pdf.columns if c != "p"],
+                  partition_key="p", extras=True, persist=False)
+    s.df.collect()
+    plan = s.df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]  # AQE's executed plan
+    aggs = [ln for ln in final.splitlines() if "HashAggregate(" in ln and "stddev_samp" in ln]
+    assert len(aggs) == 2, plan  # partial + final
+    assert all("*(" in ln and "ObjectHashAggregate" not in ln for ln in aggs), aggs
+    assert "approx_count_distinct" not in plan and "hll_" not in plan
+
+
+def test_approx_mode_distinct_counts_are_exact(spark):
+    """distinct_mode="approx" takes num_unique_values from the
+    occurrence cascade: it equals pandas nunique() per partition."""
+    pdf, df = _mixed16(spark)
+    cols = [c for c in pdf.columns if c != "p"]
+    for occ_value_mode in ("exact", "hash"):
+        s = summarize(df, columns=cols, partition_key="p",
+                      occ_value_mode=occ_value_mode)
+        got = {(r["p"], r["column"]): r["num_unique_values"] for r in s.df.collect()}
+        for (p, c), v in got.items():
+            if c.startswith("f"):
+                assert v is None
+            else:
+                assert v == pdf[pdf["p"] == p][c].nunique(), (p, c, occ_value_mode)
+        s.unpersist()
