@@ -64,7 +64,6 @@ def _summary_df(spark, sf_dir, table, pk, cols, extras=False) -> DataFrame:
         _t(spark, sf_dir, table),
         columns=list(cols),
         partition_key=pk,
-        distinct_mode="exact",
         quantile_mode="nearest",
         extras=extras,
         persist=False,
@@ -155,7 +154,6 @@ def q_summarize_sketch_quantiles(spark, sf_dir):
         _t(spark, sf_dir, "lineitem"),
         columns=list(LINEITEM_COLS),
         partition_key="l_returnflag",
-        distinct_mode="exact",
         quantile_mode="sketch",
         sketch_k=1 << 17,
         persist=False,
@@ -204,7 +202,6 @@ def q_drift_scores_events(spark, sf_dir):
         day,
         columns=list(EVENTS_COLS),
         partition_key="day",
-        distinct_mode="exact",
         quantile_mode="nearest",
         persist=False,
     )
@@ -299,8 +296,7 @@ def q_mode_parity_occ(spark, sf_dir):
     from gate_spark.localframe import local_df
 
     docs = _t(spark, sf_dir, "documents")
-    kw = dict(columns=["lang", "doc_id", "n_chars"], partition_key="source",
-              distinct_mode="exact")
+    kw = dict(columns=["lang", "doc_id", "n_chars"], partition_key="source")
     sh = summarize(docs, occ_value_mode="hash", **kw)
     se = summarize(docs, occ_value_mode="exact", **kw)
     try:
@@ -418,7 +414,6 @@ def q_summarize_tokens(spark, sf_dir):
         _tokens_view(spark, sf_dir),
         columns=["n_tok", "tokens", "doc_id"],
         partition_key="source",
-        distinct_mode="exact",
         quantile_mode="nearest",
         persist=False,
     )
@@ -550,7 +545,6 @@ def entry(spark: SparkSession) -> DataFrame:
         df,
         columns=list(LINEITEM_COLS),
         partition_key="l_returnflag",
-        distinct_mode="approx",
         quantile_mode="approx",
         extras=True,
         persist=False,

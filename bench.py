@@ -59,7 +59,7 @@ def bench_queries(spark):
             columns=["l_quantity", "l_extendedprice", "l_discount",
                      "l_linenumber", "l_linestatus"],
             partition_key="l_returnflag",
-            distinct_mode="approx", quantile_mode="approx", extras=True,
+            quantile_mode="approx", extras=True,
         )
         _force(s.df)
         s.unpersist()
@@ -87,7 +87,7 @@ def bench_queries(spark):
         )
         s = summarize(
             day, columns=["value", "user_id", "event_type"], partition_key="day",
-            distinct_mode="approx", quantile_mode="approx",
+            quantile_mode="approx",
         )
         _force(drift_scores(s, k=3))
         s.unpersist()

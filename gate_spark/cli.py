@@ -64,7 +64,12 @@ def _build_parser() -> argparse.ArgumentParser:
     p.add_argument("--n-tok-col", default="n_tok")
     p.add_argument("--domain", default=None, help="comma-separated source domain")
     p.add_argument("--vocab", default="0:50257", help="lo:hi token id bounds")
-    p.add_argument("--distinct-mode", default="approx", choices=["approx", "exact"])
+    p.add_argument(
+        "--distinct-mode", default="approx", choices=["approx", "exact"],
+        help="value keys of the occurrence/distinct-count pass: 'exact' keys"
+        " by native values, 'approx' by 64-bit fingerprints (same counts up"
+        " to 2^-64 collisions, fewer shuffle bytes)",
+    )
     p.add_argument("--quantile-mode", default="nearest", choices=["approx", "nearest"])
     p.add_argument("--no-drift", action="store_true")
     p.add_argument("--snapshot", default="auto", help="input snapshot id ('auto' = stamp)")
@@ -267,7 +272,7 @@ def main(argv: list[str] | None = None) -> int:
         n_tok_col=args.n_tok_col,
         domain=domain,
         vocab=(lo, hi),
-        distinct_mode=args.distinct_mode,
+        occ_value_mode="exact" if args.distinct_mode == "exact" else "hash",
         quantile_mode=args.quantile_mode,
         compute_drift=not args.no_drift and (len(pending) + n_history) >= 6,
         external_dup_keys=external_keys,

@@ -385,7 +385,13 @@ def detect_drift(
     )
 
 
-def drift_scores(summary: Summary, k: int = 3) -> DataFrame:
+def drift_scores(
+    summary: Summary,
+    k: int = 3,
+    *,
+    history: "pd.DataFrame | None" = None,
+    restrict_stats: list[str] | None = None,
+) -> DataFrame:
     """Every partition's drift score + verdict as ONE DataFrame:
     (partition: string, score, score_percentile, is_drifted).
 
@@ -396,29 +402,11 @@ def drift_scores(summary: Summary, k: int = 3) -> DataFrame:
     partitions' scores (scipy kind='rank'); drifted iff >= 0.95.
 
     The summary table is metadata-scale (partitions x columns rows), so
-    the whole computation — melt, z-score, pivot, kNN, percentile —
-    runs driver-side on ONE collect of the (persisted) summary
-    (:func:`drift_scores_driver`). The previous Spark z-scoring spent
-    ~4 metadata-scale stages of scheduling latency per call before the
-    collect that was needed anyway.
-    """
-    return drift_scores_driver(summary, k=k)
-
-
-def drift_scores_driver(
-    summary: Summary,
-    k: int = 3,
-    *,
-    history: "pd.DataFrame | None" = None,
-    restrict_stats: list[str] | None = None,
-) -> DataFrame:
-    """Driver-side fast path of :func:`drift_scores`: ONE collect of
-    the (persisted, metadata-scale) summary table, then melt / z-score
-    / kNN / percentile entirely in pandas+numpy, with the z-score of
-    :func:`detect_drift` (:func:`zscore_summary`) — without ~4 extra
-    metadata-scale Spark stages of pure scheduling latency per
-    validation pass. Use inside orchestrated jobs
-    (pipeline.validate_tokens).
+    the whole computation — melt, z-score (:func:`zscore_summary`, the
+    one :func:`detect_drift` uses), pivot, kNN, percentile — runs
+    driver-side on ONE collect of the (persisted) summary, without the
+    ~4 metadata-scale Spark stages of scheduling latency a Spark
+    z-scoring would add.
 
     ``history``: extra summary-format rows (pandas; same partition-key
     and column names) appended to the live summary before z-scoring —

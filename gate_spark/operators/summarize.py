@@ -223,9 +223,6 @@ def summarize(
     partition_key: str | None = None,
     previous: Sequence[Summary] | None = None,
     *,
-    distinct_mode: str = "approx",  # "exact": distinct columns are never
-    # counted over occ_value_mode="hash" fingerprints; both modes count
-    # distinct values in the occurrence cascade
     quantile_mode: str = "approx",  # "approx" | "nearest" (gate parity) | "linear" | "sketch" (KLL)
     extras: bool = False,  # add count/min/max/null_fraction/stddev (north-rule)
     accuracy: int = 10000,
@@ -233,9 +230,10 @@ def summarize(
     skew_salt: int | None = None,  # explicit two-phase salted aggregation
     quantile_columns: Sequence[str] | None = None,
     persist: bool = True,
-    occ_value_mode: str = "exact",  # "hash": 64-bit value fingerprints for the
-    # occurrence/exact-distinct shuffle (near-unique columns: same result,
-    # ~3x fewer shuffle bytes; see _occurrence_and_distinct)
+    occ_value_mode: str = "exact",  # how the occurrence cascade keys values
+    # (occurrence_ratio and num_unique_values): "exact" native values, or
+    # "hash" 64-bit fingerprints (near-unique columns: same counts up to
+    # 2^-64 collisions, ~3x fewer shuffle bytes; see _occurrence_and_distinct)
     sketch_k: int = 200,  # KLL size for quantile_mode="sketch"; k >= group
     # row count means the sketch never compacts and p50/p95 are exact
     # (bit-identical to quantile_mode="nearest")
@@ -280,7 +278,6 @@ def summarize(
                 df,
                 partition_key,
                 column_types,
-                distinct_mode=distinct_mode,
                 quantile_mode=quantile_mode,
                 extras=extras,
                 accuracy=accuracy,
@@ -347,7 +344,6 @@ def _scalar_summary(
     partition_key: str,
     column_types: dict[str, str],
     *,
-    distinct_mode: str,
     quantile_mode: str,
     extras: bool,
     accuracy: int,
@@ -389,9 +385,6 @@ def _scalar_summary(
         if quantile_columns is None
         else needs_numeric & set(quantile_columns)
     )
-    needs_distinct = {
-        c for c in cols if "num_unique_values" in TYPE_TO_STATISTICS[column_types[c]]
-    }
     needs_occ = {
         c for c in cols if "occurrence_ratio" in TYPE_TO_STATISTICS[column_types[c]]
     }
@@ -409,43 +402,41 @@ def _scalar_summary(
     )
 
     # ---- side passes: metadata-scale results keyed by (partition,
-    # column), each attached once. Every type with
-    # num_unique_values also has occurrence_ratio (functions/stats.py),
-    # so the occurrence cascade's exact distinct count (_ndv) is the
-    # num_unique_values of every mode; distinct_mode="exact" only keeps
-    # the distinct columns off value fingerprints (_occ_distinct_side).
+    # column), each attached once. num_unique_values and
+    # occurrence_ratio apply to the same type classes
+    # (functions/stats.py), so the occurrence cascade's distinct count
+    # (_ndv) is num_unique_values in every mode, keyed as
+    # occ_value_mode says.
     #
     # Columns needing BOTH occurrence_ratio and nearest-rank quantiles
     # share ONE value-keyed pass: the quantile machinery's windowed
     # (partition, column, value, _cnt) frame is exactly the occ
     # cascade's first level, so max/sum/count fold into the same final
-    # aggregation (one melt + one shuffle instead of two of each).
-    # Gated to distinct_mode != "exact": the shared melt keys by the
-    # DOUBLE value, and a distinct count over doubles is not "exact"
-    # for int values beyond 2^53 — the exact-label contract keeps its
-    # integer-keyed cascade. occurrence_ratio itself is unchanged for
-    # any value in double's exact-integer range (int-class occ columns;
-    # the 2^53 caveat parallels the documented 2^-64 hash-mode trade).
+    # aggregation (one melt + one shuffle instead of two of each). Such
+    # columns are int, bool or array classes — integral after the
+    # working projection — so the shared melt keys by the exact BIGINT
+    # value: counts, distinct counts and nearest-rank values are exact
+    # for every 64-bit integer. It needs real values, so it keys
+    # exactly under either occ_value_mode.
     # The salted path computes no percentile aggregate, so its approx
     # and linear modes take the exact nearest-rank pass.
     agg_quantiles = quantile_mode in ("approx", "linear") and not skew_salt
     shared = (
         needs_quantile & needs_occ
-        if not agg_quantiles and quantile_mode != "sketch" and distinct_mode != "exact"
+        if not agg_quantiles and quantile_mode != "sketch"
         else set()
     )
     occ_cols = needs_occ - shared
     if occ_cols:
-        side = _occ_distinct_side(
-            wdf, partition_key, occ_cols, needs_distinct & occ_cols,
-            distinct_mode, occ_value_mode,
+        side = _occurrence_and_distinct(
+            wdf, partition_key, sorted(occ_cols), value_mode=occ_value_mode
         )
         long_df = _attach(long_df, side, partition_key, {
             "occurrence_ratio": ("_occ", occ_cols),
-            "num_unique_values": ("_ndv", needs_distinct & occ_cols),
+            "num_unique_values": ("_ndv", occ_cols),
         })
     if shared:
-        pairs = _melt(wdf, partition_key, sorted(shared), "double")
+        pairs = _melt(wdf, partition_key, sorted(shared), "bigint")
         side = nearest_rank_quantiles_from_pairs(
             pairs, [partition_key, "column"], (0.5, 0.95), with_occ=True
         )
@@ -453,7 +444,7 @@ def _scalar_summary(
             "p50": ("_p50", shared),
             "p95": ("_p95", shared),
             "occurrence_ratio": ("_occ", shared),
-            "num_unique_values": ("_ndv", needs_distinct & shared),
+            "num_unique_values": ("_ndv", shared),
         })
     # the percentile aggregates (scale default), exact nearest-rank
     # quantiles (gate parity), or the KLL mergeable sketch (unbounded
@@ -681,41 +672,6 @@ def _melt(
         .select(partition_key, "_cv.column", "_cv.value")
         .where(F.col("value").isNotNull())
     )
-
-
-def _occ_distinct_side(
-    df: DataFrame,
-    partition_key: str,
-    needs_occ: set,
-    needs_distinct: set,
-    distinct_mode: str,
-    occ_value_mode: str,
-) -> DataFrame:
-    """Occurrence/exact-distinct side table with the "exact" contract
-    enforced: a column whose ``num_unique_values`` is reported under
-    ``distinct_mode="exact"`` is ALWAYS counted over exact values, even
-    when ``occ_value_mode="hash"`` — a distinct count over 64-bit
-    fingerprints is fingerprint-exact, not exact, and the API must not
-    silently weaken the label (ADVICE round 4). Hash fingerprints apply
-    only to columns feeding occurrence_ratio alone, where counts per
-    fingerprint equal counts per value up to 2^-64 collisions and the
-    ratio is unchanged. The two column sets are disjoint, so total
-    shuffled pairs match the single-pass formulation; the only extra
-    cost in the mixed regime is a second melt scan of the (persisted)
-    input."""
-    exact_cols = sorted(needs_distinct) if distinct_mode == "exact" else []
-    hash_ok = sorted(set(needs_occ) - set(exact_cols))
-    occ_cols = sorted(set(needs_occ) | set(exact_cols))
-    if occ_value_mode != "hash" or not exact_cols:
-        return _occurrence_and_distinct(
-            df, partition_key, occ_cols, value_mode=occ_value_mode
-        )
-    side = _occurrence_and_distinct(df, partition_key, exact_cols, value_mode="exact")
-    if hash_ok:
-        side = side.unionByName(
-            _occurrence_and_distinct(df, partition_key, hash_ok, value_mode="hash")
-        )
-    return side
 
 
 def _occurrence_and_distinct(

@@ -112,8 +112,8 @@ def summary_sql(
     table: str, pk: str, cols: dict[str, str], extras: bool = False, round6: bool = True
 ) -> str:
     """Long-format per-partition summary oracle for a column->type-class
-    map — the twin of gate_spark.summarize(distinct_mode='exact',
-    quantile_mode='nearest')."""
+    map — the twin of gate_spark.summarize(quantile_mode='nearest')
+    with its default exact value keys."""
     blocks = [_summary_block(table, pk, c, t, extras, round6) for c, t in cols.items()]
     return "\nUNION ALL\n".join(blocks)
 

@@ -18,8 +18,6 @@ frame would be written to a scratch table instead of memory — the
 
 from __future__ import annotations
 
-import time as _time
-from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark import StorageLevel
@@ -29,7 +27,7 @@ from pyspark.sql import functions as F
 from gate_spark.localframe import local_df
 from gate_spark.operators.summarize import Summary, summarize
 from gate_spark.operators.distribution import partition_histograms
-from gate_spark.operators.drift import drift_scores_driver
+from gate_spark.operators.drift import drift_scores
 
 
 def _psi_ks_driver(hist, spark, psi_threshold: float, ks_threshold: float):
@@ -81,29 +79,6 @@ SKETCH_STATS = [
 ]
 
 
-@contextmanager
-def _stage(times: dict | None, name: str):
-    """Wall-time a pipeline stage into ``times`` (no-op when None) —
-    the per-stage scaling attribution hook (BASELINE.md requires
-    efficiency loss to be attributable stage-by-stage). Set
-    GATE_SPARK_STAGE_TRACE=1 to also print start/end markers (lets an
-    external watcher jstack the JVM inside a specific stage)."""
-    if times is None:
-        yield
-        return
-    import os as _os
-
-    trace = _os.environ.get("GATE_SPARK_STAGE_TRACE")
-    if trace:
-        print(f"STAGE_START {name}", flush=True)
-    t0 = _time.time()
-    yield
-    dt = _time.time() - t0
-    times[name] = round(times.get(name, 0.0) + dt, 3)
-    if trace:
-        print(f"STAGE_END {name} {dt:.2f}", flush=True)
-
-
 @dataclass
 class TokenValidationResult:
     summary: Summary
@@ -139,7 +114,6 @@ def validate_tokens(
     n_tok_col: str = "n_tok",
     domain: tuple[str, ...] | None = None,
     vocab: tuple[int, int] = (0, 50257),
-    distinct_mode: str = "approx",
     # "nearest" (value-keyed exact) is the right quantile plan for this
     # pipeline's columns: token LENGTHS have a bounded domain (<= max
     # sequence length), so the pre-aggregated (partition, column,
@@ -160,19 +134,14 @@ def validate_tokens(
     truncate_lineage: bool = False,
     broadcast_dupes_threshold: int = 2_000_000,
     external_dup_keys: DataFrame | None = None,
-    occ_value_mode: str = "hash",  # 64-bit value fingerprints for the
-    # occurrence/exact-distinct shuffle over the near-unique id column:
-    # map-side combine cannot shrink that shuffle (every row crosses the
-    # wire), so the 8-byte key cuts its bytes ~3x; counts per fingerprint
-    # equal counts per value up to 2^-64 collisions. Pass "exact" for
-    # bit-exact SQL-parity comparisons. When distinct_mode="exact",
-    # columns whose num_unique_values feeds the exact distinct count are
-    # ALWAYS counted over exact values regardless of this flag — the
-    # "exact" label is never silently fingerprint-weakened
-    # (summarize._occ_distinct_side).
+    occ_value_mode: str = "hash",  # 64-bit value fingerprints as the keys
+    # of the occurrence/distinct-count shuffle over the near-unique id
+    # column: map-side combine cannot shrink that shuffle (every row
+    # crosses the wire), so the 8-byte key cuts its bytes ~3x; counts per
+    # fingerprint equal counts per value up to 2^-64 collisions. Pass
+    # "exact" to key by native values (bit-exact SQL-parity comparisons).
     hist_edges: list[float] | None = None,
     history_sketches: DataFrame | None = None,
-    stage_times: dict | None = None,
 ) -> TokenValidationResult:
     """One-scan validation of a (doc_id, tokens, n_tok, source) table.
 
@@ -206,6 +175,8 @@ def validate_tokens(
     """
     from gate_spark.operators.summarize import _qident, _qlit, _sql_lit
 
+    if not all(float(b).is_integer() for b in vocab):
+        raise ValueError(f"vocab bounds must be integers, got {tuple(vocab)!r}")
     lo, hi = int(vocab[0]), int(vocab[1])
     tk = _qident(tokens_col)
     nt = _qident(n_tok_col)
@@ -267,14 +238,13 @@ def validate_tokens(
     # is the fold of these per-partition extrema — collecting them here
     # saves _compute_distribution a dedicated min/max query (one fewer
     # job per validation pass; identical edges).
-    with _stage(stage_times, "scan_slim"):
-        pk_rows = (
-            slim.groupBy("_pk").agg(
-                F.count(F.lit(1)).alias("_rc"),
-                F.min("n_tok").alias("_nt_min"),
-                F.max("n_tok").alias("_nt_max"),
-            ).collect()
-        )
+    pk_rows = (
+        slim.groupBy("_pk").agg(
+            F.count(F.lit(1)).alias("_rc"),
+            F.min("n_tok").alias("_nt_min"),
+            F.max("n_tok").alias("_nt_max"),
+        ).collect()
+    )
 
     # uniqueness: groupBy on the slim frame (map-side combine makes the
     # shuffle carry ~1 row per key per map task). The dupes side is
@@ -308,17 +278,16 @@ def validate_tokens(
             dupes.unionByName(cross).groupBy("_key").agg(F.max("_dup").alias("_dup"))
         )
     dupes = dupes.persist()  # consumed by count + 2 joins; rows bounded below
-    with _stage(stage_times, "unique_agg"):
-        # One action yields both the dup count (join-strategy gate) and
-        # the distinct-hash count (build-side collision check for the
-        # long-keyed probe below): folding them keeps stage timings
-        # honest and avoids a second pass that could silently recompute
-        # the groupBy if the dupes cache were evicted (ADVICE round 4).
-        _dup_row = dupes.agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.count_distinct(F.xxhash64("_key")).alias("_nh"),
-        ).collect()[0]
-        dup_count, dup_hash_count = _dup_row["_n"], _dup_row["_nh"]
+    # One action yields both the dup count (join-strategy gate) and the
+    # distinct-hash count (build-side collision check for the long-keyed
+    # probe below): folding them avoids a second pass that could silently
+    # recompute the groupBy if the dupes cache were evicted (ADVICE
+    # round 4).
+    _dup_row = dupes.agg(
+        F.count(F.lit(1)).alias("_n"),
+        F.count_distinct(F.xxhash64("_key")).alias("_nh"),
+    ).collect()[0]
+    dup_count, dup_hash_count = _dup_row["_n"], _dup_row["_nh"]
     if dup_count <= broadcast_dupes_threshold:
         # Long-keyed broadcast probe. jstack at 64M rows showed 20+/32
         # executor threads inside the string-keyed UnsafeHashedRelation
@@ -409,10 +378,9 @@ def validate_tokens(
     # 64M rows with near-zero CPU: the grid was a Python-RDD scan and
     # all 32 task threads serialized behind PythonWorkerFactory
     # worker creation (see localframe.py).
-    with _stage(stage_times, "violations_agg"):
-        vrows = violations.groupBy("partition", "constraint").agg(
-            F.count(F.lit(1)).alias("n")
-        ).collect()
+    vrows = violations.groupBy("partition", "constraint").agg(
+        F.count(F.lit(1)).alias("n")
+    ).collect()
     vmap = {(r["partition"], r["constraint"]): r["n"] for r in vrows}
 
     pk_type = slim.schema["_pk"].dataType
@@ -459,7 +427,6 @@ def validate_tokens(
         stats_src,
         columns=[n_tok_col, tokens_col, doc_id_col],
         partition_key=partition_key,
-        distinct_mode=distinct_mode,
         quantile_mode=quantile_mode,
         extras=True,
         accuracy=accuracy,
@@ -473,9 +440,6 @@ def validate_tokens(
     )
     # summarize() persists the metadata-scale summary table itself, so
     # drift / callers' repeated actions reuse one aggregation run.
-    if stage_times is not None:
-        with _stage(stage_times, "summary_agg"):
-            summary.df.count()  # materialize the cached aggregation
 
     # PSI/KS: equi-width bin edges from the summary's own min/max (no
     # extra pass over data), ONE histogram aggregation over slim, then
@@ -484,32 +448,26 @@ def validate_tokens(
     # like the reference's drift kernels. The standalone
     # distribution_drift keeps the all-DataFrame formulation (it is the
     # oracle-gated variant).
-    with _stage(stage_times, "distribution"):
-        nt_mins = [r["_nt_min"] for r in pk_rows if r["_nt_min"] is not None]
-        nt_maxs = [r["_nt_max"] for r in pk_rows if r["_nt_max"] is not None]
-        nt_range = (
-            (float(min(nt_mins)), float(max(nt_maxs))) if nt_mins else None
-        )
-        distribution, history_parts, edges, pooled = _compute_distribution(
-            df, slim, summary, n_tok_col, hist_edges, history_sketches,
-            num_bins, psi_threshold, ks_threshold, nt_range,
-        )
+    nt_mins = [r["_nt_min"] for r in pk_rows if r["_nt_min"] is not None]
+    nt_maxs = [r["_nt_max"] for r in pk_rows if r["_nt_max"] is not None]
+    nt_range = (float(min(nt_mins)), float(max(nt_maxs))) if nt_mins else None
+    distribution, history_parts, edges, pooled = _compute_distribution(
+        df, slim, summary, n_tok_col, hist_edges, history_sketches,
+        num_bins, psi_threshold, ks_threshold, nt_range,
+    )
 
-    # driver-side fast path (one collect of the cached metadata-scale
-    # summary instead of ~4 scheduled Spark stages; pinned equal to
-    # the Spark drift_scores formulation in test_pipeline.py)
-    with _stage(stage_times, "drift"):
-        drift = None
-        if compute_drift:
-            if history_sketches is not None:
-                hist_pdf = _history_summary_pdf(history_sketches, partition_key)
-                drift = drift_scores_driver(
-                    summary, k=drift_k, history=hist_pdf, restrict_stats=SKETCH_STATS
-                )
-                if history_parts:
-                    drift = drift.where(~F.col("partition").isin(history_parts))
-            else:
-                drift = drift_scores_driver(summary, k=drift_k)
+    # one collect of the cached metadata-scale summary, scored driver-side
+    drift = None
+    if compute_drift:
+        if history_sketches is not None:
+            hist_pdf = _history_summary_pdf(history_sketches, partition_key)
+            drift = drift_scores(
+                summary, k=drift_k, history=hist_pdf, restrict_stats=SKETCH_STATS
+            )
+            if history_parts:
+                drift = drift.where(~F.col("partition").isin(history_parts))
+        else:
+            drift = drift_scores(summary, k=drift_k)
 
     return TokenValidationResult(
         summary=summary,

@@ -58,7 +58,6 @@ def test_date_partition_summary_roundtrip(date_keyed_df):
         date_keyed_df,
         columns=["int_col", "float_col", "string_col"],
         partition_key="day",
-        distinct_mode="exact",
         quantile_mode="nearest",
     )
     parts = s.partitions()

@@ -139,7 +139,7 @@ def test_heavy_duplicate_set_completes(spark):
     df = token_table(
         spark, 300_000, dup_frac=0.5, mean_len=8, num_partitions=8
     )
-    res = validate_tokens(df, compute_drift=False, distinct_mode="approx")
+    res = validate_tokens(df, compute_drift=False)
     v = res.verdicts.toPandas()
     dup_rows = int(
         v[v["constraint"] == "unique_doc_id"]["violation_count"].sum()

@@ -16,7 +16,7 @@ def test_no_drift(medium_df):
     """Identical partitions => score < 1e-7
     (reference tests/test_drift.py:5-15)."""
     s = summarize(medium_df, columns=COLS3, partition_key="date",
-                  distinct_mode="exact", quantile_mode="nearest")
+                  quantile_mode="nearest")
     assert len(s.partitions()) == 30
     r = detect_drift(s, cluster=False)
     assert r.score < 1e-7
@@ -33,7 +33,7 @@ def test_drift(df_with_drift):
     """Shifted last partition detected; drill-down names the shifted
     columns (reference tests/test_drift.py:30-46)."""
     s = summarize(df_with_drift, columns=COLS3, partition_key="date",
-                  distinct_mode="exact", quantile_mode="nearest")
+                  quantile_mode="nearest")
     r = detect_drift(s, cluster=False)
     assert r.score_percentile > 0.85
     dc = r.drifted_columns()
@@ -46,7 +46,7 @@ def test_drift_clustering(df_with_drift):
     (reference tests/test_drift.py:49-67)."""
     cols = [c for c in df_with_drift.columns if c != "date"]
     s = summarize(df_with_drift, columns=cols, partition_key="date",
-                  distinct_mode="exact", quantile_mode="nearest")
+                  quantile_mode="nearest")
     r = detect_drift(s, cluster=True)
     assert len(r.clustering) > 0
     assert r.score_percentile > 0.85
@@ -95,7 +95,7 @@ def test_cluster_reduced_z_matches_pandas(df_with_drift):
     from gate_spark.operators.drift import Z_EPS, cluster_reduced_z, melt_summary
 
     s = summarize(df_with_drift, columns=COLS3, partition_key="date",
-                  distinct_mode="exact", quantile_mode="nearest")
+                  quantile_mode="nearest")
     cmap = {"int_col": 0, "float_col": 0}  # string_col unassigned -> dropped
     got = (
         cluster_reduced_z(s, clustering=cmap)
@@ -110,7 +110,7 @@ def test_cluster_reduced_z_matches_pandas(df_with_drift):
     melted["value"] = (melted["value"] - g.transform("mean")) / (
         g.transform(lambda x: x.std(ddof=1)) + Z_EPS
     )
-    melted = melted[melted["column"].isin(cmap)]
+    melted = melted[melted["column"].isin(cmap)].copy()
     melted["cluster"] = melted["column"].map(cmap)
     melted["value_abs"] = melted["value"].abs()
     want = (
@@ -133,7 +133,7 @@ def test_drifted_columns_df_matches_pandas(df_with_drift):
     from gate_spark.operators.drift import drifted_columns_df
 
     s = summarize(df_with_drift, columns=COLS3, partition_key="date",
-                  distinct_mode="exact", quantile_mode="nearest")
+                  quantile_mode="nearest")
     r = detect_drift(s, cluster=False)
     want = r.drifted_columns(limit=3).reset_index()
 

@@ -29,7 +29,7 @@ def tokens(spark):
 
 @pytest.fixture(scope="module")
 def result(tokens):
-    r = validate_tokens(tokens, domain=DOMAIN, distinct_mode="exact",
+    r = validate_tokens(tokens, domain=DOMAIN, occ_value_mode="exact",
                         quantile_mode="nearest")
     yield r
     r.unpersist()
@@ -70,7 +70,7 @@ def test_verdicts_match_standalone(tokens, result):
 def test_summary_matches_standalone(tokens, result):
     s = summarize(
         tokens, columns=["n_tok", "tokens", "doc_id"], partition_key="source",
-        distinct_mode="exact", quantile_mode="nearest", extras=True,
+        quantile_mode="nearest", extras=True,
         quantile_columns=["n_tok", "tokens"],  # pipeline skips id quantiles
     )
     a = _sorted(result.summary.df.toPandas(), ["source", "column"])
@@ -115,8 +115,8 @@ def test_uniqueness_join_plan_shape(tokens, result):
 
 
 def test_driver_drift_matches_spark_formulation(tokens, result):
-    """drift_scores_driver (pipeline fast path) must equal the Spark
-    drift_scores formulation value-for-value."""
+    """The pipeline's drift table equals a standalone drift_scores on
+    the pipeline's own summary, value-for-value."""
     import numpy as np
 
     from gate_spark.operators.drift import drift_scores
@@ -143,6 +143,14 @@ def test_metadata_frames_are_jvm_local_scans(result):
         plan = frame._jdf.queryExecution().executedPlan().toString()
         assert "LocalTableScan" in plan, (name, plan)
         assert "ExistingRDD" not in plan, (name, plan)
+
+
+def test_non_integral_vocab_bound_rejected(tokens):
+    """A vocab bound that is not an integer is an error: truncating
+    hi=100.5 to 100 would flag token 100 as out of range."""
+    for vocab in ((0, 100.5), (0.5, 100)):
+        with pytest.raises(ValueError, match="vocab"):
+            validate_tokens(tokens, vocab=vocab)
 
 
 def test_empty_domain_flags_every_row(spark):

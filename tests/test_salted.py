@@ -26,13 +26,13 @@ def test_salted_matches_plain_exact(skewed):
     plain = _pdf(
         summarize(
             skewed, columns=["n_tok", "tok_len", "doc_id"], partition_key="source",
-            distinct_mode="exact", quantile_mode="nearest", extras=True,
+            quantile_mode="nearest", extras=True,
         )
     )
     salted = _pdf(
         summarize(
             skewed, columns=["n_tok", "tok_len", "doc_id"], partition_key="source",
-            distinct_mode="exact", quantile_mode="nearest", extras=True, skew_salt=8,
+            quantile_mode="nearest", extras=True, skew_salt=8,
         )
     )
     assert list(plain.columns) == list(salted.columns)
@@ -44,18 +44,21 @@ def test_salted_matches_plain_exact(skewed):
         assert np.allclose(a, b, rtol=1e-5, atol=1e-6, equal_nan=True), c
 
 
-def test_salted_hll_close(skewed):
+def test_salted_distinct_counts_equal_plain(skewed):
+    """Both paths count distinct values in the same occurrence cascade,
+    so the salted counts equal the plain ones exactly."""
     plain = _pdf(
-        summarize(skewed, columns=["doc_id"], partition_key="source",
-                  distinct_mode="exact")
+        summarize(skewed, columns=["doc_id"], partition_key="source")
     )
     salted = _pdf(
         summarize(skewed, columns=["doc_id"], partition_key="source",
-                  distinct_mode="approx", skew_salt=8)
+                  skew_salt=8)
     )
-    exact = plain["num_unique_values"].to_numpy(dtype=float)
-    est = salted["num_unique_values"].to_numpy(dtype=float)
-    assert np.all(np.abs(est - exact) / np.maximum(exact, 1) < 0.1)
+    assert plain["source"].tolist() == salted["source"].tolist()
+    assert (
+        plain["num_unique_values"].to_numpy()
+        == salted["num_unique_values"].to_numpy()
+    ).all()
 
 
 def test_salted_sketch_quantiles_on_skew(spark):
@@ -85,7 +88,7 @@ def test_salted_sketch_quantiles_on_skew(spark):
     try:
         s = summarize(
             df, columns=["x", "grp"], partition_key="part",
-            distinct_mode="exact", quantile_mode="sketch", extras=True,
+            quantile_mode="sketch", extras=True,
             skew_salt=8, persist=False,
         )
         # phase 1 groups by (part, _salt): the alias is folded away in
@@ -99,7 +102,7 @@ def test_salted_sketch_quantiles_on_skew(spark):
 
         plain = summarize(
             df, columns=["x", "grp"], partition_key="part",
-            distinct_mode="exact", quantile_mode="nearest", extras=True,
+            quantile_mode="nearest", extras=True,
             persist=False,
         )
         ref = {(r["part"], r["column"]): r for r in plain.df.collect()}

@@ -70,7 +70,6 @@ def _run_wide(spark, rows_per_part: int):
         df,
         columns=columns,
         partition_key="date",
-        distinct_mode="approx",
         quantile_mode="approx",
     )
     assert len(s.partitions()) == PARTS

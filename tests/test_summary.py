@@ -24,7 +24,6 @@ def test_summarize_tiny_exact(tiny_df):
         tiny_df,
         columns=["string_col", "int_col", "float_col"],
         partition_key="grp",
-        distinct_mode="exact",
         quantile_mode="nearest",
     )
     pdf = s.value()
@@ -85,7 +84,6 @@ def test_multi_partition_and_extras(small_df):
         columns=["string_col", "int_col", "float_col"],
         partition_key="grp",
         extras=True,
-        distinct_mode="exact",
         quantile_mode="nearest",
     )
     pdf = s.value()
@@ -110,7 +108,7 @@ def test_bool_and_array_columns(spark):
     )
     df = spark.createDataFrame(pdf)
     s = summarize(df, columns=["flag", "tokens"], partition_key="p",
-                  distinct_mode="exact", quantile_mode="nearest")
+                  quantile_mode="nearest")
     rows = {(r["p"], r["column"]): r for _, r in s.value().iterrows()}
     # bool treated as tinyint (gate/summary.py:188-191)
     assert rows[("x", "flag")]["mean"] == F32(0.5)
@@ -129,7 +127,6 @@ def test_differential_against_duckdb(documents):
         documents,
         columns=["lang", "n_chars"],
         partition_key="source",
-        distinct_mode="exact",
         quantile_mode="linear",
     )
     got = {
@@ -165,17 +162,15 @@ def test_differential_against_duckdb(documents):
 
 
 def test_approx_modes_close_to_exact(documents):
-    """Scale-default sketch statistics stay within tolerance of exact."""
+    """Scale-default sketch quantiles stay within tolerance of exact."""
     approx = summarize(documents, columns=["n_chars"], partition_key="source").value()
     exact = summarize(
         documents, columns=["n_chars"], partition_key="source",
-        distinct_mode="exact", quantile_mode="nearest",
+        quantile_mode="nearest",
     ).value()
     m = approx.merge(exact, on=["source", "column"], suffixes=("_a", "_e"))
-    assert (
-        (m["num_unique_values_a"] - m["num_unique_values_e"]).abs()
-        <= 0.1 * m["num_unique_values_e"] + 2
-    ).all()
+    # both count distinct values in the occurrence cascade
+    assert (m["num_unique_values_a"] == m["num_unique_values_e"]).all()
     assert (m["p50_a"] - m["p50_e"]).abs().max() <= 0.05 * m["p50_e"].abs().max() + 1
 
 
@@ -200,11 +195,8 @@ def test_quantile_columns_subset(spark, small_df):
 def test_occ_value_modes_agree(documents):
     """occ_value_mode="hash" (64-bit value fingerprints in the
     occurrence shuffle, the pipeline scale default) must yield the same
-    summary values as "exact" — counts per fingerprint equal counts per
-    value up to 2^-64 collisions — and under distinct_mode="exact" the
-    num_unique_values column must be IDENTICAL by construction, because
-    exact-distinct columns are always counted over exact values
-    (_occ_distinct_side; ADVICE round 4)."""
+    occurrence_ratio and num_unique_values as "exact" — counts per
+    fingerprint equal counts per value up to 2^-64 collisions."""
     kw = dict(columns=["lang", "doc_id", "n_chars"], partition_key="source")
     # nulls in the value columns: a null is no value under either key
     with_nulls = documents.selectExpr(
@@ -213,38 +205,67 @@ def test_occ_value_modes_agree(documents):
         "IF(n_chars % 7 = 0, NULL, n_chars) AS n_chars",
     )
     for df in (documents, with_nulls):
-        for dmode in ("approx", "exact"):
-            a = summarize(df, distinct_mode=dmode, occ_value_mode="hash", **kw)
-            b = summarize(df, distinct_mode=dmode, occ_value_mode="exact", **kw)
-            pa = a.value().sort_values(["source", "column"]).reset_index(drop=True)
-            pb = b.value().sort_values(["source", "column"]).reset_index(drop=True)
-            assert (pa["occurrence_ratio"].fillna(-1) == pb["occurrence_ratio"].fillna(-1)).all(), dmode
-            assert (pa["num_unique_values"].fillna(-1) == pb["num_unique_values"].fillna(-1)).all(), dmode
-            a.unpersist(); b.unpersist()
+        a = summarize(df, occ_value_mode="hash", **kw)
+        b = summarize(df, occ_value_mode="exact", **kw)
+        assert "xxhash64" in a.df._jdf.queryExecution().optimizedPlan().toString()
+        pa = a.value().sort_values(["source", "column"]).reset_index(drop=True)
+        pb = b.value().sort_values(["source", "column"]).reset_index(drop=True)
+        assert (pa["occurrence_ratio"].fillna(-1) == pb["occurrence_ratio"].fillna(-1)).all()
+        assert (pa["num_unique_values"].fillna(-1) == pb["num_unique_values"].fillna(-1)).all()
+        a.unpersist(); b.unpersist()
 
 
 def test_shared_occ_quantile_pass_matches_split_paths(documents):
     """Columns needing BOTH occurrence_ratio and nearest-rank quantiles
-    ride one shared value-keyed pass when distinct_mode != "exact"
-    (r6: the windowed quantile counts frame IS the occ cascade's first
-    level). Every statistic must equal the split-path formulation that
-    distinct_mode="exact" still uses — same fixture, cell-identical."""
-    kw = dict(
-        columns=["lang", "doc_id", "n_chars"],
-        partition_key="source",
-        quantile_mode="nearest",
-        extras=True,
+    ride one shared value-keyed pass (the windowed quantile counts frame
+    IS the occ cascade's first level). Its statistics must equal the
+    split passes other columns take — the occurrence cascade and the
+    nearest-rank quantile pass, called directly — cell-identical."""
+    from gate_spark.operators.summarize import (
+        _nearest_rank_quantiles,
+        _occurrence_and_distinct,
     )
-    a = summarize(documents, distinct_mode="approx", **kw)  # shared pass
-    b = summarize(documents, distinct_mode="exact", **kw)  # split paths
-    pa = a.value().sort_values(["source", "column"]).reset_index(drop=True)
-    pb = b.value().sort_values(["source", "column"]).reset_index(drop=True)
-    for c in ["occurrence_ratio", "num_unique_values", "p50", "p95",
-              "coverage", "mean", "count", "max", "min", "null_fraction",
-              "stddev"]:
-        assert (pa[c].fillna(-1) == pb[c].fillna(-1)).all(), c
-    a.unpersist()
-    b.unpersist()
+
+    cols = ["doc_id", "n_chars"]
+    with_nulls = documents.selectExpr(
+        "source", "IF(n_chars % 5 = 0, NULL, doc_id) AS doc_id", "n_chars"
+    )
+    for df in (documents, with_nulls):
+        s = summarize(df, columns=cols, partition_key="source",
+                      quantile_mode="nearest")
+        got = {(r["source"], r["column"]): r for r in s.df.collect()}
+        occ = {(r["source"], r["column"]): r
+               for r in _occurrence_and_distinct(df, "source", cols).collect()}
+        q = {(r["source"], r["column"]): r for r in _nearest_rank_quantiles(
+            df, "source", cols, (0.5, 0.95)).collect()}
+        assert set(got) == set(occ) == set(q)
+        for key, r in got.items():
+            assert r["occurrence_ratio"] == F32(occ[key]["_occ"]), key
+            assert r["num_unique_values"] == F32(occ[key]["_ndv"]), key
+            assert r["p50"] == F32(q[key]["_p50"]), key
+            assert r["p95"] == F32(q[key]["_p95"]), key
+        s.unpersist()
+
+
+def test_integers_past_2_53_keep_distinct_values(spark):
+    """Integers beyond double's exact range stay distinct in every
+    value-keyed pass: [2^53, 2^53+1, 2^53+1] has 2 distinct values and
+    occurrence_ratio 2/3 under the default settings, the shared
+    nearest-rank pass, fingerprint keys and the salted path."""
+    df = spark.createDataFrame(
+        [("a", 2**53), ("a", 2**53 + 1), ("a", 2**53 + 1)], "p string, v long"
+    )
+    for kw in (
+        dict(),
+        dict(quantile_mode="nearest"),
+        dict(occ_value_mode="hash"),
+        dict(skew_salt=2),
+    ):
+        s = summarize(df, columns=["v"], partition_key="p", **kw)
+        (r,) = s.df.collect()
+        assert r["num_unique_values"] == 2.0, kw
+        assert r["occurrence_ratio"] == F32(2 / 3), kw
+        s.unpersist()
 
 
 def test_null_partition_key_keeps_side_statistics(spark):
@@ -263,7 +284,7 @@ def test_null_partition_key_keeps_side_statistics(spark):
     df = spark.createDataFrame(pdf, "p string, i long, s string")
     for kw in (
         dict(),
-        dict(distinct_mode="exact", quantile_mode="nearest"),
+        dict(occ_value_mode="hash"),
         dict(quantile_mode="nearest"),
         dict(skew_salt=2),
     ):
@@ -319,7 +340,7 @@ def test_moments_pass_runs_under_codegen(spark):
 
 
 def test_approx_mode_distinct_counts_are_exact(spark):
-    """distinct_mode="approx" takes num_unique_values from the
+    """With approx quantiles num_unique_values still comes from the
     occurrence cascade: it equals pandas nunique() per partition."""
     pdf, df = _mixed16(spark)
     cols = [c for c in pdf.columns if c != "p"]
