@@ -34,7 +34,7 @@ from gate_spark.operators.constraints import (
     evaluate_constraints,
 )
 from gate_spark.operators.drift import DriftResult, detect_drift, drift_scores
-from gate_spark.operators.distribution import distribution_drift, ks_statistic, psi
+from gate_spark.operators.distribution import distribution_drift
 from gate_spark.pipeline import TokenValidationResult, validate_tokens
 from gate_spark.session import get_spark
 from gate_spark.sketches import (
@@ -77,8 +77,6 @@ __all__ = [
     "detect_drift",
     "drift_scores",
     "distribution_drift",
-    "ks_statistic",
-    "psi",
     "TokenValidationResult",
     "validate_tokens",
     "get_spark",

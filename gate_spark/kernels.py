@@ -15,6 +15,10 @@ Reference behaviors reproduced:
                                 -> agglomerative_average (gate/drift.py:568-573)
 - sklearn cosine_similarity     -> cosine_similarity_matrix
 - pandas groupby z-score        -> zscore_groups       (gate/drift.py:475-502)
+
+North-rule extras (no reference counterpart):
+- PSI / KS of binned counts     -> psi_ks (operators/distribution.py,
+                                   streaming.py; SQL twin in oracles.py)
 """
 
 from __future__ import annotations
@@ -60,6 +64,31 @@ def zscore_groups(x: np.ndarray, codes: np.ndarray, eps: float) -> np.ndarray:
     with np.errstate(invalid="ignore", divide="ignore"):
         std = np.sqrt(np.bincount(codes, weights=dev * dev) / (n - 1))
     return dev / (std[codes] + eps)
+
+
+PSI_EPS = 1e-6
+
+
+def psi_ks(p_counts: np.ndarray, q_counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Row-wise PSI and KS between two (rows, bins) count arrays.
+
+    Each row's counts become proportions floored at ``PSI_EPS``; then
+    PSI = sum over bins (p - q) * ln(p / q) and KS = max |CDF_p - CDF_q|
+    over the bin boundaries. A row whose ``q`` total is 0 has no
+    distribution to compare against and scores (0.0, 0.0).
+    """
+    p = np.asarray(p_counts, dtype=np.float64)
+    q = np.asarray(q_counts, dtype=np.float64)
+    q_tot = q.sum(axis=1, keepdims=True)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        p = np.maximum(p / p.sum(axis=1, keepdims=True), PSI_EPS)
+        q = np.maximum(q / q_tot, PSI_EPS)
+        psi = ((p - q) * np.log(p / q)).sum(axis=1)
+        ks = np.abs(np.cumsum(p, axis=1) - np.cumsum(q, axis=1)).max(axis=1)
+    empty = q_tot[:, 0] <= 0
+    psi[empty] = 0.0
+    ks[empty] = 0.0
+    return psi, ks
 
 
 def percentile_of_score(a: np.ndarray, score: float) -> float:

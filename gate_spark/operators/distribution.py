@@ -10,9 +10,10 @@ aggregation:
 2. per-(partition, bin) counts: one ``groupBy`` with map-side combine
    — the only shuffle, carrying at most partitions x bins rows;
 3. PSI/KS per partition against the pooled counts of all *other*
-   partitions, computed driver-side in numpy on the collected
-   (partitions x bins)-row histogram — no second pass over raw data,
-   and no metadata-scale Spark stages for the comparison arithmetic.
+   partitions, computed driver-side by ``kernels.psi_ks`` on the
+   collected (partitions x bins)-row histogram — no second pass over
+   raw data, and no metadata-scale Spark stages for the comparison
+   arithmetic.
 
 At 10^12 rows the cost is one scan + one (partitions x bins)-row
 shuffle; the driver math is O(partitions x bins).
@@ -25,8 +26,6 @@ from operator import add
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-PSI_EPS = 1e-6
 
 
 def _bin_expr(value: Column, inner_edges: list[float]) -> Column:
@@ -66,29 +65,26 @@ def partition_histograms(
     )
 
 
-def psi_ks_from_histogram(hist: DataFrame) -> DataFrame:
+def psi_ks_from_histogram(
+    hist: DataFrame, psi_threshold: float = 0.2, ks_threshold: float = 0.2
+) -> DataFrame:
     """PSI + KS per partition vs the pooled histogram of all other
     partitions, from a (partition, bin, bin_count) table.
 
-    PSI = sum over bins (p - q) * ln(p / q), with epsilon-floored
-    proportions; KS = max |CDF_p - CDF_q| over bin edges.
-
     The histogram is metadata-scale by construction (partitions x
     bins rows — :func:`partition_histograms` has already reduced the
-    data), so the comparison arithmetic runs driver-side in numpy on
-    the collected table and returns a ``LocalTableScan`` frame — the
-    same topology the validation pipeline uses (pipeline._psi_ks_driver).
-    The previous all-DataFrame formulation re-derived ``hist`` in six
-    plan branches (dense crossJoin + three aggregates + window): on a
-    raw-data-backed ``hist`` the physical plan carried the full input
-    scan ~10x (50 Exchanges for the bench's psi_ks query — see
-    plans/r06/psi_ks_before.txt) and spent ~0.6 s scheduling
-    metadata-scale stages.
+    data), so it is collected once into a (partitions x bins) count
+    matrix and scored driver-side by :func:`kernels.psi_ks`, each row
+    against the column sums minus itself. A null partition key is a
+    partition like any other. Returns a ``LocalTableScan`` frame
+    (partition, psi, ks, psi_drifted, ks_drifted), partitions in sort
+    order with null last.
     """
     import numpy as np
 
+    from gate_spark.kernels import psi_ks
     from gate_spark.localframe import local_df
-    from pyspark.sql.types import DoubleType, StructField, StructType
+    from pyspark.sql.types import BooleanType, DoubleType, StructField, StructType
 
     pk_field = hist.schema["partition"]
     rows = hist.collect()  # partitions x bins rows
@@ -101,22 +97,11 @@ def psi_ks_from_histogram(hist: DataFrame) -> DataFrame:
         mat = np.zeros((len(parts), len(bins)), dtype=np.float64)
         for r in rows:
             mat[p_idx[r["partition"]], b_idx[r["bin"]]] += r["bin_count"]
-        totals = mat.sum(axis=1, keepdims=True)
-        gbin = mat.sum(axis=0, keepdims=True)
-        gtot = mat.sum()
-        for part in parts:
-            i = p_idx[part]
-            holdout = gtot - totals[i][0]
-            if holdout <= 0:
-                # single partition: no holdout distribution to compare
-                # against — zero drift rather than NaN/inf from 0/0
-                out.append((part, 0.0, 0.0))
-                continue
-            p = np.maximum(mat[i] / totals[i], PSI_EPS)
-            q = np.maximum((gbin[0] - mat[i]) / holdout, PSI_EPS)
-            psi_v = float(((p - q) * np.log(p / q)).sum())
-            ks_v = float(np.abs(np.cumsum(p) - np.cumsum(q)).max())
-            out.append((part, psi_v, ks_v))
+        psi, ks = psi_ks(mat, mat.sum(axis=0) - mat)
+        out = [
+            (part, s, k, s >= psi_threshold, k >= ks_threshold)
+            for part, s, k in zip(parts, psi.tolist(), ks.tolist())
+        ]
     return local_df(
         hist.sparkSession,
         out,
@@ -125,6 +110,8 @@ def psi_ks_from_histogram(hist: DataFrame) -> DataFrame:
                 StructField("partition", pk_field.dataType),
                 StructField("psi", DoubleType()),
                 StructField("ks", DoubleType()),
+                StructField("psi_drifted", BooleanType()),
+                StructField("ks_drifted", BooleanType()),
             ]
         ),
     )
@@ -146,44 +133,13 @@ def distribution_drift(
     explicit ``edges`` to pin binning (oracle parity / stable
     cross-run comparisons); default derives equi-depth edges from a
     quantile sketch.
+
+    Eager: the edges (unless pinned) and the histogram are computed by
+    Spark actions at call time, and the result is a local frame of the
+    scores. Streaming inputs are not supported; for a stream,
+    ``streaming.incremental_drift`` scores PSI per micro-batch.
     """
     if edges is None:
         edges = compute_bin_edges(df, value_col, num_bins, accuracy)
     hist = partition_histograms(df, partition_key, value_col, edges)
-    scores = psi_ks_from_histogram(hist)
-    return scores.select(
-        "partition",
-        "psi",
-        "ks",
-        (F.col("psi") >= F.lit(psi_threshold)).alias("psi_drifted"),
-        (F.col("ks") >= F.lit(ks_threshold)).alias("ks_drifted"),
-    )
-
-
-def psi(hist_current: dict[int, int], hist_baseline: dict[int, int]) -> float:
-    """Driver-side PSI between two small histograms (utility/tests)."""
-    import math
-
-    bins = sorted(set(hist_current) | set(hist_baseline))
-    tc = sum(hist_current.values()) or 1
-    tb = sum(hist_baseline.values()) or 1
-    total = 0.0
-    for b in bins:
-        p = max(hist_current.get(b, 0) / tc, PSI_EPS)
-        q = max(hist_baseline.get(b, 0) / tb, PSI_EPS)
-        total += (p - q) * math.log(p / q)
-    return total
-
-
-def ks_statistic(hist_current: dict[int, int], hist_baseline: dict[int, int]) -> float:
-    """Driver-side KS from two small histograms (utility/tests)."""
-    bins = sorted(set(hist_current) | set(hist_baseline))
-    tc = sum(hist_current.values()) or 1
-    tb = sum(hist_baseline.values()) or 1
-    cp = cq = 0.0
-    best = 0.0
-    for b in bins:
-        cp += hist_current.get(b, 0) / tc
-        cq += hist_baseline.get(b, 0) / tb
-        best = max(best, abs(cp - cq))
-    return best
+    return psi_ks_from_histogram(hist, psi_threshold, ks_threshold)

@@ -26,48 +26,11 @@ from pyspark.sql import functions as F
 
 from gate_spark.localframe import local_df
 from gate_spark.operators.summarize import Summary, summarize
-from gate_spark.operators.distribution import partition_histograms
+from gate_spark.operators.distribution import (
+    partition_histograms,
+    psi_ks_from_histogram,
+)
 from gate_spark.operators.drift import drift_scores
-
-
-def _psi_ks_driver(hist, spark, psi_threshold: float, ks_threshold: float):
-    """PSI/KS from a collected (partition, bin, bin_count) histogram —
-    same math as distribution.psi_ks_from_histogram, computed in numpy
-    on the metadata-scale table (one Spark job instead of six stages)."""
-    import numpy as np
-    import pandas as pd
-
-    pdf = hist.toPandas()
-    rows = []
-    if len(pdf):
-        pivot = pdf.pivot_table(
-            index="partition", columns="bin", values="bin_count", fill_value=0
-        ).astype(float)
-        mat = pivot.to_numpy()
-        totals = mat.sum(axis=1, keepdims=True)
-        gbin = mat.sum(axis=0, keepdims=True)
-        gtot = mat.sum()
-        for i, part in enumerate(pivot.index):
-            holdout = gtot - totals[i][0]
-            if holdout <= 0:
-                # single partition (or one partition holds every row):
-                # there is no holdout distribution to compare against —
-                # report zero drift instead of NaN/inf from 0/0.
-                rows.append((str(part), 0.0, 0.0, False, False))
-                continue
-            p = np.maximum(mat[i] / totals[i], 1e-6)
-            q = np.maximum((gbin[0] - mat[i]) / holdout, 1e-6)
-            psi_v = float(((p - q) * np.log(p / q)).sum())
-            ks_v = float(np.abs(np.cumsum(p) - np.cumsum(q)).max())
-            rows.append(
-                (str(part), psi_v, ks_v, psi_v >= psi_threshold, ks_v >= ks_threshold)
-            )
-    return local_df(
-        spark,
-        rows,
-        "partition string, psi double, ks double, psi_drifted boolean,"
-        " ks_drifted boolean",
-    )
 
 
 # summary statistics reconstructible exactly from mergeable sketch
@@ -234,10 +197,9 @@ def validate_tokens(
     # (task launch + cache decompression that a 4x-core run repays
     # almost unchanged).
     # min/max of n_tok ride the same aggregation: the PSI/KS stage
-    # derives its default bin edges from the GLOBAL n_tok range, which
-    # is the fold of these per-partition extrema — collecting them here
-    # saves _compute_distribution a dedicated min/max query (one fewer
-    # job per validation pass; identical edges).
+    # derives its default bin edges from the GLOBAL n_tok range, the
+    # fold of these per-partition extrema — the one edge derivation,
+    # with no min/max query of its own.
     pk_rows = (
         slim.groupBy("_pk").agg(
             F.count(F.lit(1)).alias("_rc"),
@@ -441,18 +403,18 @@ def validate_tokens(
     # summarize() persists the metadata-scale summary table itself, so
     # drift / callers' repeated actions reuse one aggregation run.
 
-    # PSI/KS: equi-width bin edges from the summary's own min/max (no
-    # extra pass over data), ONE histogram aggregation over slim, then
-    # the PSI/KS arithmetic on the collected (partitions x bins <= few
-    # hundred rows) histogram — metadata-scale driver math, exactly
-    # like the reference's drift kernels. The standalone
-    # distribution_drift keeps the all-DataFrame formulation (it is the
-    # oracle-gated variant).
+    # PSI/KS: equi-width bin edges from the global n_tok range folded
+    # from the scan collect above (no extra pass over data), ONE
+    # histogram aggregation over slim, then the PSI/KS arithmetic on
+    # the collected (partitions x bins <= few hundred rows) histogram —
+    # metadata-scale driver math, like the reference's drift kernels.
     nt_mins = [r["_nt_min"] for r in pk_rows if r["_nt_min"] is not None]
     nt_maxs = [r["_nt_max"] for r in pk_rows if r["_nt_max"] is not None]
-    nt_range = (float(min(nt_mins)), float(max(nt_maxs))) if nt_mins else None
+    # no n_tok at all (all null, or an empty table): nothing to bin, so
+    # unit-range edges
+    nt_range = (float(min(nt_mins)), float(max(nt_maxs))) if nt_mins else (0.0, 1.0)
     distribution, history_parts, edges, pooled = _compute_distribution(
-        df, slim, summary, n_tok_col, hist_edges, history_sketches,
+        slim, n_tok_col, hist_edges, history_sketches,
         num_bins, psi_threshold, ks_threshold, nt_range,
     )
 
@@ -483,42 +445,33 @@ def validate_tokens(
 
 
 def _compute_distribution(
-    df, slim, summary, n_tok_col, hist_edges, history_sketches,
-    num_bins, psi_threshold, ks_threshold, nt_range=None,
+    slim, n_tok_col, hist_edges, history_sketches,
+    num_bins, psi_threshold, ks_threshold, nt_range,
 ):
     if hist_edges is not None:
         edges = [float(e) for e in hist_edges]
     else:
-        if nt_range is not None:
-            # global n_tok extrema folded from the scan_slim collect —
-            # no dedicated min/max query (same values: the summary's
-            # per-partition min/max fold to exactly this range)
-            lo_v, hi_v = nt_range
-        else:
-            mm = (
-                summary.df.where(F.col("column") == n_tok_col)
-                .agg(F.min("min").alias("lo"), F.max("max").alias("hi"))
-                .first()
-            )
-            lo_v = float(mm["lo"]) if mm["lo"] is not None else 0.0
-            hi_v = float(mm["hi"]) if mm["hi"] is not None else lo_v + 1.0
+        lo_v, hi_v = nt_range
         step = (hi_v - lo_v) / num_bins or 1.0
         edges = [lo_v + i * step for i in range(1, num_bins)]
-    hist = partition_histograms(slim, "_pk", "n_tok", edges)
+    # partition keys as strings: the schema the committed partitions'
+    # histograms (and the violations table) use
+    keyed = slim.selectExpr("CAST(_pk AS STRING) AS _pk", "n_tok")
+    hist = partition_histograms(keyed, "_pk", "n_tok", edges)
     history_parts: list[str] = []
     pooled = False
     if history_sketches is not None:
         hh, history_parts = _history_histograms(history_sketches, n_tok_col, edges)
         if hh is not None:
             pooled = True
-            hist = hist.select(
-                F.col("partition").cast("string").alias("partition"), "bin", "bin_count"
-            ).unionByName(hh)
-    distribution = _psi_ks_driver(
-        hist, df.sparkSession, psi_threshold, ks_threshold
-    )
+            hist = hist.unionByName(hh)
+    distribution = psi_ks_from_histogram(hist, psi_threshold, ks_threshold)
     if history_parts:
-        distribution = distribution.where(~F.col("partition").isin(history_parts))
+        # IS NULL first: `NOT (NULL IN (...))` is NULL and would drop a
+        # null pending partition, which is never a committed one
+        distribution = distribution.where(
+            F.col("partition").isNull() | ~F.col("partition").isin(history_parts)
+        )
     return distribution, history_parts, edges, pooled
 
 

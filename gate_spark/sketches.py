@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gate_spark.localframe import local_df
+from gate_spark.operators.distribution import _bin_expr
 from gate_spark.operators.summarize import classify_type
 
 SKETCH_SCHEMA = T.StructType(
@@ -54,15 +55,6 @@ SKETCH_SCHEMA = T.StructType(
         T.StructField("edges", T.ArrayType(T.DoubleType()), True),
     ]
 )
-
-
-def _bin_index(value, inner_edges: list[float]):
-    """Bucket 0..len(edges) as a codegen'd comparison chain (twin of
-    distribution._bin_expr)."""
-    expr = F.lit(0)
-    for e in inner_edges:
-        expr = expr + (value >= F.lit(float(e))).cast("int")
-    return expr
 
 
 def column_sketches(
@@ -98,7 +90,7 @@ def column_sketches(
                 F.max(d).alias(f"c{i}__max"),
             ]
             if c in hist_edges:
-                b = _bin_index(d, hist_edges[c])
+                b = _bin_expr(d, hist_edges[c])
                 nbins = len(hist_edges[c]) + 1
                 aggs.append(
                     F.array(

@@ -289,6 +289,8 @@ def incremental_drift(
         import numpy as np
         import pandas as pd
 
+        from gate_spark.kernels import psi_ks
+
         cms_size = occ_depth * occ_width if occ_col else 0
         if state.exists:
             count, total, totsq, hist, cms_flat, occ_rows = state.get
@@ -321,9 +323,7 @@ def incremental_drift(
 
         psi = drifted = None
         if state.exists and count >= min_history and b_n > 0:
-            p = np.maximum(b_hist / b_n, 1e-6)
-            q = np.maximum(hist / count, 1e-6)
-            psi = float(((p - q) * np.log(p / q)).sum())
+            psi = float(psi_ks(b_hist[None], hist[None])[0][0])
             drifted = bool(psi >= psi_threshold)
 
         count += b_n

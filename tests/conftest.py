@@ -9,6 +9,8 @@ import datetime as dt
 import numpy as np
 import pandas as pd
 import pytest
+from py4j.protocol import Py4JError
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 from gate_spark.session import get_spark
@@ -20,6 +22,20 @@ SF_DIR = "/root/testdata/sf0.001"
 def spark() -> SparkSession:
     s = get_spark("gate_spark_tests", cores=8, shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture(autouse=True)
+def _jvm_alive():
+    """Stop the run at the first test that finds the shared JVM dead
+    (e.g. killed for memory) instead of failing every later test with
+    its own ConnectionRefused. One gateway round trip per test; tests
+    that never started Spark skip it."""
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        try:
+            sc._jvm.java.lang.System.currentTimeMillis()
+        except (Py4JError, OSError) as e:
+            pytest.exit(f"JVM died (OOM?) — stopping the run: {e!r}", returncode=3)
 
 
 @pytest.fixture(scope="session")

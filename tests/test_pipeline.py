@@ -208,3 +208,43 @@ def test_sql_literals_match_column_lit(spark):
         assert a.schema["x"].dataType == b.schema["x"].dataType or v is None, v
         x, y = a.first()["x"], b.first()["x"]
         assert x == y or (isinstance(x, float) and math.isnan(x) and math.isnan(y)), v
+
+
+def test_null_partition_gets_distribution_row(tokens):
+    """A null partition key is a partition of its own in PSI/KS: the
+    distribution has one row per verdict partition, null included, and
+    equals the standalone operator on the same edges (so every other
+    partition's holdout counts the null partition's rows)."""
+    from gate_spark import distribution_drift
+
+    t = tokens.withColumn(
+        "source",
+        F.when(F.pmod(F.xxhash64("doc_id"), F.lit(7)) == 0, F.lit(None))
+        .otherwise(F.col("source")),
+    )
+    r = validate_tokens(t, domain=DOMAIN, compute_drift=False)
+    verdict_parts = {row["partition"] for row in r.verdicts.collect()}
+    assert None in verdict_parts
+    rows = r.distribution.collect()
+    assert len(rows) == len(verdict_parts)
+    by_part = lambda rs: {row["partition"]: tuple(row) for row in rs}
+    got = by_part(rows)
+    assert set(got) == verdict_parts
+    want = distribution_drift(t, "source", "n_tok", edges=r.hist_edges)
+    assert got == by_part(want.collect())
+    r.unpersist()
+
+
+def test_all_null_n_tok_unit_range_edges(spark):
+    """With no n_tok value to take a range from, the default edges span
+    [0, 1] and the distribution is empty but keeps its schema."""
+    t = token_table(spark, 300, seed=3, num_partitions=2).withColumn(
+        "n_tok", F.lit(None).cast("int")
+    )
+    r = validate_tokens(t, compute_drift=False)
+    assert r.hist_edges == [i * 0.1 for i in range(1, 10)]
+    assert r.distribution.columns == [
+        "partition", "psi", "ks", "psi_drifted", "ks_drifted"
+    ]
+    assert r.distribution.count() == 0
+    r.unpersist()

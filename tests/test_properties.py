@@ -2,8 +2,8 @@
 
 These pin algebraic invariants the example-based suites cannot sweep:
 KLL rank-error and merge-order invariance, percentile_of_score's
-scipy-rank semantics, histogram-quantile monotonicity/bounds, and the
-nearest-rank rule. No SparkSession — the kernels run driver-side or
+scipy-rank semantics, histogram-quantile monotonicity/bounds, the
+nearest-rank rule, and the PSI/KS kernel's identities and bounds. No SparkSession — the kernels run driver-side or
 inside Arrow batches, so the properties hold wherever they execute.
 """
 
@@ -13,7 +13,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from gate_spark.kernels import percentile_of_score
+from gate_spark.kernels import percentile_of_score, psi_ks
 from gate_spark.kll import KLLSketch
 from gate_spark.sketches import quantiles_from_hist
 
@@ -131,3 +131,64 @@ def test_hist_quantiles_monotone_and_bounded(hist, qpair):
     assert out[0] <= out[1]
     for v in out:
         assert vmin <= v <= vmax
+
+
+# ----------------------------------------------------------- PSI / KS
+
+@st.composite
+def count_pair(draw):
+    """Two same-length count vectors, each with a positive total."""
+    n = draw(st.integers(min_value=1, max_value=40))
+    vec = st.lists(
+        st.integers(min_value=0, max_value=10_000), min_size=n, max_size=n
+    ).map(lambda c: c if sum(c) else [1] + c[1:])
+    return draw(vec), draw(vec)
+
+
+def _one(p, q):
+    psi, ks = psi_ks(np.asarray([p]), np.asarray([q]))
+    return float(psi[0]), float(ks[0])
+
+
+@settings(max_examples=100, deadline=None)
+@given(pq=count_pair())
+def test_psi_ks_identical_is_zero(pq):
+    assert _one(pq[0], pq[0]) == (0.0, 0.0)
+
+
+@settings(max_examples=100, deadline=None)
+@given(pq=count_pair())
+def test_psi_ks_bounds_and_symmetry(pq):
+    """PSI >= 0 and symmetric in its arguments; KS in [0, 1]."""
+    p, q = pq
+    psi, ks = _one(p, q)
+    psi_r, ks_r = _one(q, p)
+    assert psi >= 0.0
+    assert np.isclose(psi, psi_r, rtol=1e-9, atol=1e-12)
+    assert 0.0 <= ks <= 1.0
+    assert np.isclose(ks, ks_r, rtol=1e-9, atol=1e-12)
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    pq=count_pair(),
+    a=st.integers(min_value=1, max_value=1000),
+    b=st.integers(min_value=1, max_value=1000),
+)
+def test_psi_ks_scale_invariant(pq, a, b):
+    """Only proportions matter: scaling either count vector by a
+    positive factor leaves PSI and KS unchanged."""
+    p, q = pq
+    base = _one(p, q)
+    scaled = _one([a * c for c in p], [b * c for c in q])
+    assert np.allclose(base, scaled, rtol=1e-9, atol=1e-12)
+
+
+def test_psi_ks_zero_q_row_and_two_bin_example():
+    """A row with nothing to compare against scores (0, 0), row-wise,
+    and a hand-computed two-bin row: p = (0.5, 0.5), q = (0.25, 0.75)
+    gives PSI = 0.25 ln 2 + (-0.25) ln(2/3) = 0.25 ln 3 and KS = 0.25."""
+    psi, ks = psi_ks(np.array([[1, 1], [3, 1]]), np.array([[1, 3], [0, 0]]))
+    assert np.isclose(psi[0], 0.25 * np.log(3.0), rtol=1e-12)
+    assert np.isclose(ks[0], 0.25, rtol=1e-12)
+    assert (psi[1], ks[1]) == (0.0, 0.0)

@@ -97,6 +97,35 @@ def test_resume_without_hist_degrades_to_pending_scope(spark, table):
     res.unpersist()
 
 
+def test_null_pending_partition_keeps_distribution_row(spark, table):
+    """A pending partition with a null key keeps its distribution row on
+    resume, scored as in a full-table run."""
+    committed = [f"src{s}" for s in range(6)]
+    nulled = table.withColumn(
+        "source", F.when(F.col("source") != "src7", F.col("source"))
+    )
+    full = validate_tokens(nulled, hist_edges=EDGES, compute_drift=False)
+    hsk = sk.column_sketches(
+        nulled.where(F.col("source").isin(committed)).select("source", "n_tok"),
+        ["n_tok"],
+        "source",
+        hist_edges={"n_tok": EDGES},
+    )
+    res = validate_tokens(
+        nulled.where(~F.col("source").isin(committed) | F.col("source").isNull()),
+        hist_edges=EDGES,
+        history_sketches=hsk,
+        compute_drift=False,
+    )
+    res_dist = _dist_map(res.distribution)
+    assert set(res_dist) == {"src6", None}
+    full_dist = _dist_map(full.distribution)
+    for p in res_dist:
+        assert res_dist[p] == pytest.approx(full_dist[p], abs=1e-12)
+    full.unpersist()
+    res.unpersist()
+
+
 def test_external_dup_keys_flags_cross_partition_duplicate(spark, table):
     pending = ["src6", "src7"]
     ext = table.where(F.col("source") == "src0").select("doc_id")
