@@ -189,8 +189,8 @@ def q_zscores_clustered(spark, sf_dir):
 
 def q_drifted_columns(spark, sf_dir):
     """The user-facing 'which columns drifted' answer (D13/D16): per-
-    column top-|z| with window dedup + limit, Spark formulation pinned
-    against the pandas DriftResult.drifted_columns in test_drift.py."""
+    column top-|z| with dedup + limit, pinned against
+    DriftResult.drifted_columns in test_drift.py."""
     s = _summary_df(spark, sf_dir, "lineitem", "l_returnflag", LINEITEM_COLS)
     out = drifted_columns_df(s, "R", limit=3)
     return out.select("column", "statistic", _r6(F.col("z")).alias("z"), "rank")

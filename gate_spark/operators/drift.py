@@ -7,7 +7,7 @@ Pipeline (reference: gate/drift.py:328-472):
    std, ddof=1 like pandas ``std``);
 2. optionally cluster correlated columns and reduce |z| to cluster
    means (gate/drift.py:388-411);
-3. pivot to a (partition x feature) matrix, fillna(0) before and after
+3. pivot to a (partition x feature) matrix, missing features 0
    (gate/drift.py:421-429);
 4. kNN over partition vectors; score = mean distance to k nearest
    non-self neighbors (gate/drift.py:431-444);
@@ -15,10 +15,12 @@ Pipeline (reference: gate/drift.py:328-472):
    partitions' scores (gate/drift.py:107-126).
 
 The summary table is metadata-scale (partitions x columns rows), so
-detect_drift collects it ONCE and runs steps 1-5 driver-side in float64
-(z-score: kernels.zscore_groups), mirroring the reference's math. The
-Spark ``normalize`` window below is the SQL-twin formulation behind
-``drifted_columns_df``, ``cluster_reduced_z`` and the oracle queries.
+every entry point here collects it ONCE and runs the math driver-side
+in float64: step 1 is :func:`zscore_summary` (kernels.zscore_groups),
+step 2 :func:`_cluster_mean_abs`, steps 3-4 :func:`_knn_scores`.
+Functions that return a Spark DataFrame build it with ``local_df`` (a
+JVM ``LocalTableScan``). A null partition key is a partition of its
+own throughout.
 """
 
 from __future__ import annotations
@@ -27,8 +29,8 @@ import typing
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 from gate_spark import kernels
 from gate_spark.localframe import local_df
@@ -39,39 +41,19 @@ MIN_HISTORY = 5  # gate/drift.py:357
 CLUSTER_MIN_COLUMNS = 10  # gate/drift.py:389
 
 
-def melt_summary(summary_df: DataFrame, partition_key: str, statistics: list[str]) -> DataFrame:
-    """Wide summary -> (partition, column, statistic, value), nulls
-    dropped (reference: gate/drift.py:490-495)."""
-    structs = [
-        F.struct(F.lit(s).alias("statistic"), F.col(s).cast("double").alias("value"))
-        for s in statistics
-    ]
-    return (
-        summary_df.select(
-            partition_key, "column", F.explode(F.array(*structs)).alias("_sv")
-        )
-        .select(partition_key, "column", "_sv.statistic", "_sv.value")
-        .where(F.col("value").isNotNull())
-    )
-
-
 def normalize(summary_df: DataFrame, partition_key: str, statistics: list[str]) -> DataFrame:
-    """Melt + per-(column, statistic) z-score as a window aggregate
-    (reference: gate/drift.py:475-502; pandas std is ddof=1 ->
-    stddev_samp)."""
-    melted = melt_summary(summary_df, partition_key, statistics)
-    w = Window.partitionBy("column", "statistic")
-    return melted.withColumn(
-        "value",
-        (F.col("value") - F.avg("value").over(w))
-        / (F.stddev_samp("value").over(w) + F.lit(Z_EPS)),
-    )
+    """Melt + per-(column, statistic) z-score (reference:
+    gate/drift.py:475-502) as a local frame (partition key, column,
+    statistic, value double); a one-value group's z-score is NULL.
+    Eager: the (bounded, metadata-scale) summary is collected once at
+    call time."""
+    z = zscore_summary(summary_df.toPandas(), partition_key, statistics)
+    return _keyed_frame(summary_df, partition_key, z, "column", "string")
 
 
 def zscore_summary(pdf: pd.DataFrame, pk: str, statistics: list[str]) -> pd.DataFrame:
     """Collected wide summary -> (partition, column, statistic, value)
-    with nulls dropped and each (column, statistic) group z-scored —
-    the driver-side twin of :func:`normalize`."""
+    with nulls dropped and each (column, statistic) group z-scored."""
     melted = pdf.melt(
         id_vars=[pk, "column"],
         value_vars=statistics,
@@ -83,6 +65,63 @@ def zscore_summary(pdf: pd.DataFrame, pk: str, statistics: list[str]) -> pd.Data
         melted["value"].to_numpy(dtype=np.float64), codes, Z_EPS
     )
     return melted.reset_index(drop=True)
+
+
+def _cluster_mean_abs(z: pd.DataFrame, clusters: pd.DataFrame, pk: str) -> pd.DataFrame:
+    """Mean |z| per (partition, cluster, statistic): the clustered
+    path's feature reduction (gate/drift.py:388-411). ``clusters`` maps
+    column -> cluster; columns without a cluster drop out."""
+    merged = z.merge(clusters, on=["column"], how="left").dropna(subset=["cluster"])
+    merged["value"] = merged["value"].abs()
+    return (
+        merged.groupby([pk, "cluster", "statistic"], dropna=False)["value"]
+        .mean()
+        .reset_index()
+    )
+
+
+def _knn_scores(z: pd.DataFrame, pk: str, k: int):
+    """Long (partition, column, statistic, value) frame -> the
+    (partition x (column, statistic)) feature matrix with missing
+    features 0 (gate/drift.py:421-429), each row's k+1 nearest rows
+    (distances and indices; the row itself is one of them, at distance
+    ~0) and its score: the mean of the k distances after the first
+    (gate/drift.py:431-444). Rows are the partitions in sorted order,
+    a null key last."""
+    feats = (
+        z.fillna({"value": 0.0})
+        .groupby([pk, "column", "statistic"], dropna=False)["value"]
+        .mean()
+        .unstack(["column", "statistic"], fill_value=0.0)
+    )
+    # column-major, as pandas stores a pivot: BLAS rounding depends on
+    # the layout, and this one keeps the scores bit-stable
+    x = np.asfortranarray(feats.to_numpy(dtype=np.float64))
+    dists, indices = kernels.knn_query(x, k + 1)
+    dists[np.isinf(dists)] = np.nan
+    return feats, dists, indices, kernels.nanmean_rows(dists[:, 1:])
+
+
+def _spark_keys(keys: pd.Series, key_type: T.DataType) -> list:
+    """Collected partition keys as Python values: NaN -> None, and
+    integral keys back to int (toPandas widens an integral column that
+    holds a null to float)."""
+    integral = isinstance(key_type, T.IntegralType)
+    return [None if pd.isna(v) else int(v) if integral else v for v in keys.tolist()]
+
+
+def _keyed_frame(summary_df: DataFrame, pk: str, z: pd.DataFrame, label: str,
+                 label_type: str) -> DataFrame:
+    """(pk, label, statistic, value) rows of ``z`` as a local frame whose
+    key column has the summary's key type; NaN values become NULL."""
+    key_type = summary_df.schema[pk].dataType
+    values = [None if np.isnan(v) else v for v in z["value"].tolist()]
+    return local_df(
+        summary_df.sparkSession,
+        zip(_spark_keys(z[pk], key_type), z[label].tolist(), z["statistic"], values),
+        f"`{pk}` {key_type.simpleString()}, {label} {label_type},"
+        " statistic string, value double",
+    )
 
 
 def _ordered_partitions(keys: pd.Series) -> list:
@@ -323,8 +362,8 @@ def detect_drift(
     columns = summary.columns
     do_cluster = cluster and len(columns) >= CLUSTER_MIN_COLUMNS
 
-    clustering_df = None
     clustered_features = None
+    feat_src = norm_pdf
     if do_cluster:
         from gate_spark.operators.clustering import compute_clusters
 
@@ -337,45 +376,25 @@ def detect_drift(
             summary.embedding_columns,
             name_embedder=name_embedder,
         )
-        merged = norm_pdf.merge(clustering_df, on=["column"], how="left")
-        merged["value_abs"] = merged["value"].abs()
-        cluster_normalized = (
-            merged.groupby([pk, "cluster", "statistic"])["value_abs"].mean().reset_index()
+        feat_src = _cluster_mean_abs(norm_pdf, clustering_df, pk).rename(
+            columns={"cluster": "column"}
         )
-        cluster_normalized = cluster_normalized.rename(
-            columns={"cluster": "column", "value_abs": "value"}
+        cf = norm_pdf[norm_pdf[pk] == current_partition].merge(
+            clustering_df, on=["column"], how="left"
         )
-        feat_src = cluster_normalized
-    else:
-        feat_src = norm_pdf
+        clustered_features = cf.rename(columns={"value": "z-score"}).drop(columns=[pk])
 
-    nn_features = (
-        feat_src.fillna(0.0)
-        .pivot_table(index=pk, columns=["column", "statistic"], values="value")
-        .fillna(0.0)
-    )
-    # partition order: pandas pivot sorts the index; the reference
-    # relies on the current partition being the LAST concatenated row
-    # only for neighbor lookup — we look the current row up by label.
-    x = nn_features.to_numpy(dtype=np.float64)
-    dists, indices = kernels.knn_query(x, k + 1)
+    # rows are in sorted partition order; the reference relies on the
+    # current partition being the LAST concatenated row only for
+    # neighbor lookup — we look the current row up by label.
+    nn_features, _, indices, scores = _knn_scores(feat_src, pk, k)
     cur_pos = int(nn_features.index.get_loc(current_partition))
     neighbor_partitions = [
         nn_features.index[j] for j in indices[cur_pos][1:] if j != cur_pos
     ]
-    dists = dists.copy()
-    dists[np.isinf(dists)] = np.nan
-    scores = pd.Series(kernels.nanmean_rows(dists[:, 1:]), index=nn_features.index)
-
-    if do_cluster:
-        cf = norm_pdf[norm_pdf[pk] == current_partition].merge(
-            clustering_df, on=["column"], how="left"
-        )
-        cf = cf.rename(columns={"value": "z-score"}).drop(columns=[pk])
-        clustered_features = cf
 
     return DriftResult(
-        all_scores=scores,
+        all_scores=pd.Series(scores, index=nn_features.index),
         nn_features=nn_features,
         summary=summary,
         current_partition=current_partition,
@@ -401,12 +420,11 @@ def drift_scores(
     summary space; percentile = rank of its score among all OTHER
     partitions' scores (scipy kind='rank'); drifted iff >= 0.95.
 
-    The summary table is metadata-scale (partitions x columns rows), so
-    the whole computation — melt, z-score (:func:`zscore_summary`, the
-    one :func:`detect_drift` uses), pivot, kNN, percentile — runs
-    driver-side on ONE collect of the (persisted) summary, without the
-    ~4 metadata-scale Spark stages of scheduling latency a Spark
-    z-scoring would add.
+    The whole computation — z-score (:func:`zscore_summary`), pivot and
+    kNN (:func:`_knn_scores`, both shared with :func:`detect_drift`),
+    percentile — runs driver-side on ONE collect of the (persisted)
+    summary. A null partition key is scored as a partition of its own
+    and reported as a NULL ``partition``.
 
     ``history``: extra summary-format rows (pandas; same partition-key
     and column names) appended to the live summary before z-scoring —
@@ -429,22 +447,13 @@ def drift_scores(
             [pdf[[pk, "column"] + statistics], history[[pk, "column"] + statistics]],
             ignore_index=True,
         )
-    melted = zscore_summary(pdf, pk, statistics)
-    nn_features = (
-        melted.fillna(0.0)
-        .pivot_table(index=pk, columns=["column", "statistic"], values="value")
-        .fillna(0.0)
-    )
-    x = nn_features.to_numpy(dtype=np.float64)
-    dists, _ = kernels.knn_query(x, min(k + 1, len(x)))
-    d = dists.copy()
-    d[np.isinf(d)] = np.nan
-    scores = kernels.nanmean_rows(d[:, 1:])
+    feats, _, _, scores = _knn_scores(zscore_summary(pdf, pk, statistics), pk, k)
+    keys = _spark_keys(feats.index.to_series(), summary.df.schema[pk].dataType)
     rows = []
-    for i, part in enumerate(nn_features.index):
+    for i, part in enumerate(keys):
         others = np.delete(scores, i)
         pct = kernels.percentile_of_score(others, float(scores[i])) / 100.0
-        rows.append((str(part), float(scores[i]), pct, pct >= 0.95))
+        rows.append((None if part is None else str(part), float(scores[i]), pct, pct >= 0.95))
     spark = summary.df.sparkSession
     return local_df(
         spark, rows,
@@ -455,44 +464,39 @@ def drift_scores(
 def drifted_columns_df(
     summary: Summary, current_partition, limit: int = 10
 ) -> DataFrame:
-    """Spark formulation of ``DriftResult.drifted_columns`` (D13/D16,
-    reference: gate/drift.py:144-236 drill-down ranking + :247-303
-    per-column dedup), for the non-clustered path: every (column,
-    statistic) z-score of the current partition (missing pairs fill to
-    0.0, mirroring the pandas pivot fillna), the top-|z| statistic per
-    column (ties to the lexicographically first statistic — the stable
-    order the pandas pivot yields), ranked by |z| descending with
-    column-name tiebreak, cut to ``limit``.
+    """``DriftResult.drifted_columns`` for the non-clustered path as a
+    DataFrame (D13/D16, reference: gate/drift.py:144-236 drill-down
+    ranking + :247-303 per-column dedup): every (column, statistic)
+    z-score of the current partition (missing pairs fill to 0.0, like
+    the pandas pivot), the top-|z| statistic per column (ties to the
+    lexicographically first statistic — the stable order the pandas
+    pivot yields), ranked by |z| descending with column-name tiebreak,
+    cut to ``limit``.
 
     Z-scores span every partition in ``summary`` — pre-filter the
     summary (``summary.df.where(...)``) to mirror detect_drift's
     validity vector / trailing window restrictions.
 
-    Output: (column, statistic, z, rank), rank 1..limit. Window sorts
-    here run over the metadata-scale z table (columns x statistics
-    rows), never over data — the global-ordering window is single-
-    partition by construction and holds at any table width that fits a
-    summary."""
+    Output: a local frame (column, statistic, z, rank), rank 1..limit.
+    Eager: the summary is collected once at call time (no streaming
+    input)."""
     pk = summary.partition_key
-    stats = summary.statistics()
-    z = normalize(summary.df, pk, stats)
-    pairs = z.select("column", "statistic").distinct()
-    cur = pairs.join(
-        z.where(F.col(pk) == F.lit(current_partition)).select(
-            "column", "statistic", "value"
-        ),
-        ["column", "statistic"],
-        "left",
-    ).withColumn("z", F.coalesce(F.col("value"), F.lit(0.0)))
-    w_col = Window.partitionBy("column").orderBy(
-        F.abs(F.col("z")).desc(), F.col("statistic").asc()
+    z = zscore_summary(summary.df.toPandas(), pk, summary.statistics())
+    cur = z[z[pk] == current_partition][["column", "statistic", "value"]]
+    pairs = z[["column", "statistic"]].drop_duplicates()
+    cur = pairs.merge(cur, on=["column", "statistic"], how="left")
+    cur["z"] = cur["value"].fillna(0.0)
+    cur["abs_z"] = cur["z"].abs()
+    top = (
+        cur.sort_values(["abs_z", "statistic"], ascending=[False, True])
+        .drop_duplicates("column")
+        .sort_values(["abs_z", "column"], ascending=[False, True])
+        .head(limit)
     )
-    top = cur.withColumn("_rn", F.row_number().over(w_col)).where(F.col("_rn") == 1)
-    w_all = Window.orderBy(F.abs(F.col("z")).desc(), F.col("column").asc())
-    return (
-        top.withColumn("rank", F.row_number().over(w_all))
-        .where(F.col("rank") <= limit)
-        .select("column", "statistic", "z", "rank")
+    return local_df(
+        summary.df.sparkSession,
+        zip(top["column"], top["statistic"], top["z"].tolist(), range(1, len(top) + 1)),
+        "column string, statistic string, z double, rank int",
     )
 
 
@@ -501,50 +505,33 @@ def cluster_reduced_z(
     clustering: "DataFrame | dict[str, int] | None" = None,
     num_clusters: int = 3,
 ) -> DataFrame:
-    """Spark formulation of detect_drift's cluster-mean reduce (D6/D7,
-    reference: gate/drift.py:388-411): per-(column, statistic) z-scores
-    averaged as |z| per (partition, cluster, statistic) — the feature
-    reduction the clustered drift path feeds to kNN. Pinned against the
-    pandas reduce inside :func:`detect_drift` in test_drift.py and
-    oracle-gated (``zscores_clustered``).
+    """detect_drift's cluster-mean reduce (D6/D7, reference:
+    gate/drift.py:388-411) as a DataFrame: per-(column, statistic)
+    z-scores averaged as |z| per (partition, cluster, statistic) — the
+    feature reduction the clustered drift path feeds to kNN, through the
+    same :func:`_cluster_mean_abs`. Oracle-gated (``zscores_clustered``).
 
-    ``clustering``: a (column, cluster:int) DataFrame, a column->cluster
-    dict, or None for a deterministic name-rank map (columns sorted by
-    name, cluster = rank mod ``num_clusters``) — the reproducible stand-
-    in a SQL twin can rebuild, where the engine's own compute_clusters
-    path uses similarity-driven agglomerative clusters.
+    ``clustering``: a (column, cluster:int) DataFrame (collected; it is
+    column-count scale), a column->cluster dict, or None for a
+    deterministic name-rank map (columns sorted by name, cluster = rank
+    mod ``num_clusters``) — the reproducible stand-in a SQL twin can
+    rebuild, where the engine's own compute_clusters path uses
+    similarity-driven agglomerative clusters. Columns with no cluster
+    drop out.
 
-    Scale shape: the z table is metadata-scale (partitions x columns x
-    stats); the cluster map is column-count-scale and broadcast; the
-    reduce is one groupBy over metadata rows. Columns with no cluster
-    assignment drop out (inner join) exactly like pandas groupby's
-    NaN-key drop after the reference's left merge."""
+    Output: a local frame (partition key, cluster, statistic, value).
+    Eager: the summary is collected once at call time (no streaming
+    input)."""
     pk = summary.partition_key
-    z = normalize(summary.df, pk, summary.statistics())
-    spark = summary.df.sparkSession
+    z = zscore_summary(summary.df.toPandas(), pk, summary.statistics())
     if clustering is None:
-        cmap = (
-            z.select("column")
-            .distinct()
-            .withColumn(
-                "cluster",
-                ((F.dense_rank().over(Window.orderBy("column")) - 1) % num_clusters).cast(
-                    "int"
-                ),
-            )
-        )
-    elif isinstance(clustering, dict):
-        cmap = local_df(
-            spark, [(c, int(k)) for c, k in clustering.items()],
-            "column string, cluster int",
-        )
-    else:
-        cmap = clustering
-    return (
-        z.join(F.broadcast(cmap), "column", "inner")
-        .groupBy(pk, "cluster", "statistic")
-        .agg(F.avg(F.abs(F.col("value"))).alias("value"))
-    )
+        names = sorted(z["column"].unique())
+        clustering = {c: i % num_clusters for i, c in enumerate(names)}
+    elif isinstance(clustering, DataFrame):
+        clustering = {r["column"]: r["cluster"] for r in clustering.collect()}
+    clusters = pd.DataFrame(list(clustering.items()), columns=["column", "cluster"])
+    red = _cluster_mean_abs(z, clusters, pk).astype({"cluster": int})
+    return _keyed_frame(summary.df, pk, red, "cluster", "int")
 
 
 def name_to_ec(name: str, embedding_columns: list[str]) -> str:

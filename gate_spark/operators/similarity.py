@@ -137,12 +137,17 @@ def _tree_union(dfs: list) -> DataFrame:
 
 def _finish_topk(cand: DataFrame, k: int) -> DataFrame:
     """Exact final top-k over the (already partially-reduced) candidate
-    table. The window sort here runs over metadata-scale input."""
+    table. The window sort here runs over metadata-scale input. A query
+    id that occurs twice yields each neighbor twice: the pair collapses
+    to its max cosine, inside the window's one query_id shuffle."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
     return (
-        cand.withColumn("rank", F.row_number().over(w))
+        cand.repartition("query_id")
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.max("cosine").alias("cosine"))
+        .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cosine", "rank")
     )
@@ -302,12 +307,10 @@ def cosine_topk(
             buf = []
     if buf:
         run_chunk(buf)
-    # A final exact top-k over the union: chunks partition the query
-    # ROWS disjointly, but a query id duplicated across a chunk
-    # boundary would otherwise return up to 2k rows with duplicate
-    # ranks (ADVICE round 5). The window runs over chunks x |q| x k
-    # candidate rows — metadata-scale; for unique ids it re-derives
-    # the identical per-chunk ranks.
+    # A final exact top-k over the union: a query id duplicated across
+    # a chunk boundary has candidates in two pieces. It runs over
+    # chunks x |q| x k rows — metadata-scale; for unique ids it
+    # re-derives the identical per-chunk ranks.
     return _finish_topk(_tree_union(pieces).drop("rank"), k)
 
 

@@ -120,7 +120,8 @@ def summary_sql(
 
 def zscore_sql(summary_subquery: str, pk: str, stats: list[str] | None = None) -> str:
     """Melt + per-(column, statistic) z-score oracle over a summary
-    subquery (twin of gate_spark normalize(); ddof=1, +1e-10)."""
+    subquery: the SQL twin of drift.normalize, i.e. of
+    kernels.zscore_groups (ddof=1, +1e-10), written as a window."""
     stats = stats or GATE_STATS
     melts = [
         f"SELECT {pk}, \"column\", '{s}' AS statistic, CAST({s} AS DOUBLE) AS value"
@@ -141,7 +142,7 @@ def zscore_clustered_sql(
     stats: list[str] | None = None,
     num_clusters: int = 3,
 ) -> str:
-    """Twin of gate_spark cluster_reduced_z (D6/D7): melt + z-score,
+    """Twin of drift.cluster_reduced_z (D6/D7): melt + z-score,
     deterministic name-rank cluster map (dense_rank over sorted column
     names mod ``num_clusters``), then mean |z| per (partition, cluster,
     statistic)."""
@@ -176,7 +177,7 @@ def drifted_columns_sql(
     limit: int = 10,
     stats: list[str] | None = None,
 ) -> str:
-    """Twin of gate_spark drifted_columns_df (D13/D16): current
+    """Twin of drift.drifted_columns_df (D13/D16): current
     partition's z-scores, missing (column, statistic) pairs filled with
     0.0, top-|z| statistic per column (statistic-name tiebreak), ranked
     by |z| desc with column-name tiebreak, cut to ``limit``."""

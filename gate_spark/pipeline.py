@@ -426,8 +426,7 @@ def validate_tokens(
             drift = drift_scores(
                 summary, k=drift_k, history=hist_pdf, restrict_stats=SKETCH_STATS
             )
-            if history_parts:
-                drift = drift.where(~F.col("partition").isin(history_parts))
+            drift = _drop_committed(drift, history_parts)
         else:
             drift = drift_scores(summary, k=drift_k)
 
@@ -466,13 +465,15 @@ def _compute_distribution(
             pooled = True
             hist = hist.unionByName(hh)
     distribution = psi_ks_from_histogram(hist, psi_threshold, ks_threshold)
-    if history_parts:
-        # IS NULL first: `NOT (NULL IN (...))` is NULL and would drop a
-        # null pending partition, which is never a committed one
-        distribution = distribution.where(
-            F.col("partition").isNull() | ~F.col("partition").isin(history_parts)
-        )
-    return distribution, history_parts, edges, pooled
+    return _drop_committed(distribution, history_parts), history_parts, edges, pooled
+
+
+def _drop_committed(df: DataFrame, history_parts: list[str]) -> DataFrame:
+    """Rows of ``df`` whose ``partition`` is not a committed one; a null
+    partition is never committed (`NOT (NULL IN (...))` alone drops it)."""
+    if not history_parts:
+        return df
+    return df.where(F.col("partition").isNull() | ~F.col("partition").isin(history_parts))
 
 
 def _history_histograms(

@@ -85,14 +85,14 @@ def test_drift_scores_dataframe(medium_df, df_with_drift):
 
 
 def test_cluster_reduced_z_matches_pandas(df_with_drift):
-    """The Spark cluster_reduced_z reduce (oracle-gated as the
-    zscores_clustered query) reproduces the pandas cluster-mean
-    feature reduction inside detect_drift for the same cluster map:
+    """cluster_reduced_z (oracle-gated as the zscores_clustered query)
+    equals an independent pandas z-score and cluster-mean reduce for
+    the same cluster map:
     mean |z| per (partition, cluster, statistic), unassigned columns
     dropped."""
     import numpy as np
 
-    from gate_spark.operators.drift import Z_EPS, cluster_reduced_z, melt_summary
+    from gate_spark.operators.drift import Z_EPS, cluster_reduced_z
 
     s = summarize(df_with_drift, columns=COLS3, partition_key="date",
                   quantile_mode="nearest")
@@ -105,7 +105,10 @@ def test_cluster_reduced_z_matches_pandas(df_with_drift):
     assert set(got["cluster"]) == {0}
 
     # pandas twin: the detect_drift reduce (drift.py merged-groupby)
-    melted = melt_summary(s.df, "date", s.statistics()).toPandas()
+    melted = s.df.toPandas().melt(
+        id_vars=["date", "column"], value_vars=s.statistics(),
+        var_name="statistic", value_name="value",
+    ).dropna(subset=["value"]).astype({"value": np.float64})
     g = melted.groupby(["column", "statistic"])["value"]
     melted["value"] = (melted["value"] - g.transform("mean")) / (
         g.transform(lambda x: x.std(ddof=1)) + Z_EPS
@@ -127,9 +130,9 @@ def test_cluster_reduced_z_matches_pandas(df_with_drift):
 
 
 def test_drifted_columns_df_matches_pandas(df_with_drift):
-    """The Spark drifted_columns_df formulation (oracle-gated as the
-    drifted_columns query) reproduces the driver-side pandas
-    DriftResult.drifted_columns exactly on the non-clustered path."""
+    """drifted_columns_df (oracle-gated as the drifted_columns query)
+    reproduces DriftResult.drifted_columns exactly on the non-clustered
+    path."""
     from gate_spark.operators.drift import drifted_columns_df
 
     s = summarize(df_with_drift, columns=COLS3, partition_key="date",
@@ -178,3 +181,23 @@ def test_partition_order_matches_spark_nulls_first(spark):
         .select("k").distinct().orderBy("k").collect()
     ]
     assert _ordered_partitions(pd.Series(keys)) == spark_order
+
+
+def test_null_partition_key_is_its_own_partition(df_with_drift):
+    """A null partition key is one row of its own in the kNN feature
+    matrix on the plain and the clustered path, and a NULL partition in
+    drift_scores — never filled in as a value."""
+    t = df_with_drift.withColumn(
+        "date", F.when(F.col("date") > F.lit("2022-01-01 12:00:00"), F.col("date"))
+    )
+    cols = [c for c in t.columns if c != "date"]
+    s = summarize(t, columns=cols, partition_key="date", quantile_mode="nearest")
+    for cluster in (False, True):
+        r = detect_drift(s, cluster=cluster)
+        assert len(r.all_scores) == 9
+        assert r.all_scores.index.isna().sum() == 1
+        assert r.is_drifted
+    v = drift_scores(s, k=3).toPandas()
+    assert len(v) == 10
+    assert v["partition"].isna().sum() == 1
+    s.unpersist()

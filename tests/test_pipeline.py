@@ -211,10 +211,11 @@ def test_sql_literals_match_column_lit(spark):
 
 
 def test_null_partition_gets_distribution_row(tokens):
-    """A null partition key is a partition of its own in PSI/KS: the
-    distribution has one row per verdict partition, null included, and
-    equals the standalone operator on the same edges (so every other
-    partition's holdout counts the null partition's rows)."""
+    """A null partition key is a partition of its own in PSI/KS and in
+    drift: the distribution and the drift table have one row per verdict
+    partition, null included (as NULL, not a filled-in value); the
+    distribution equals the standalone operator on the same edges (so
+    every other partition's holdout counts the null partition's rows)."""
     from gate_spark import distribution_drift
 
     t = tokens.withColumn(
@@ -222,9 +223,12 @@ def test_null_partition_gets_distribution_row(tokens):
         F.when(F.pmod(F.xxhash64("doc_id"), F.lit(7)) == 0, F.lit(None))
         .otherwise(F.col("source")),
     )
-    r = validate_tokens(t, domain=DOMAIN, compute_drift=False)
+    r = validate_tokens(t, domain=DOMAIN)
     verdict_parts = {row["partition"] for row in r.verdicts.collect()}
     assert None in verdict_parts
+    drift_parts = [row["partition"] for row in r.drift.collect()]
+    assert len(drift_parts) == len(verdict_parts)
+    assert set(drift_parts) == verdict_parts
     rows = r.distribution.collect()
     assert len(rows) == len(verdict_parts)
     by_part = lambda rs: {row["partition"]: tuple(row) for row in rs}

@@ -3,17 +3,21 @@
 These pin algebraic invariants the example-based suites cannot sweep:
 KLL rank-error and merge-order invariance, percentile_of_score's
 scipy-rank semantics, histogram-quantile monotonicity/bounds, the
-nearest-rank rule, and the PSI/KS kernel's identities and bounds. No SparkSession — the kernels run driver-side or
-inside Arrow batches, so the properties hold wherever they execute.
+nearest-rank rule, the PSI/KS kernel's identities and bounds, and the
+z-score kernel and kNN scorer behind every drift entry point. No
+SparkSession — the kernels run driver-side or inside Arrow batches, so
+the properties hold wherever they execute.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from gate_spark.kernels import percentile_of_score, psi_ks
+from gate_spark.kernels import percentile_of_score, psi_ks, zscore_groups
+from gate_spark.operators.drift import Z_EPS, _knn_scores
 from gate_spark.kll import KLLSketch
 from gate_spark.sketches import quantiles_from_hist
 
@@ -192,3 +196,88 @@ def test_psi_ks_zero_q_row_and_two_bin_example():
     assert np.isclose(psi[0], 0.25 * np.log(3.0), rtol=1e-12)
     assert np.isclose(ks[0], 0.25, rtol=1e-12)
     assert (psi[1], ks[1]) == (0.0, 0.0)
+
+
+# ------------------------------------------------- z-score / kNN drift
+
+# Dyadic values (multiples of 1/64 below 2^20): sums and squares are
+# exact in float64, so the comparisons below test the rule, not the
+# summation order of two implementations.
+dyadic = st.integers(min_value=-(1 << 20), max_value=1 << 20).map(lambda i: i / 64)
+
+
+@st.composite
+def grouped_values(draw):
+    n = draw(st.integers(min_value=1, max_value=200))
+    x = np.asarray(draw(st.lists(dyadic, min_size=n, max_size=n)))
+    g = draw(st.integers(min_value=1, max_value=8))
+    codes = np.asarray(
+        draw(st.lists(st.integers(0, g - 1), min_size=n, max_size=n))
+    )
+    return x, np.unique(codes, return_inverse=True)[1]  # codes 0..G-1
+
+
+@settings(max_examples=100, deadline=None)
+@given(xc=grouped_values())
+def test_zscore_groups_matches_pandas_transform(xc):
+    """(x - mean) / (std + Z_EPS) per group with pandas' ddof=1 std."""
+    x, codes = xc
+    g = pd.Series(x).groupby(codes)
+    want = (x - g.transform("mean")) / (g.transform("std") + Z_EPS)
+    got = zscore_groups(x, codes, Z_EPS)
+    np.testing.assert_allclose(got, want.to_numpy(), rtol=0, atol=1e-12)
+
+
+@settings(max_examples=100, deadline=None)
+@given(xc=grouped_values(), seed=st.integers(0, 2**32 - 1))
+def test_zscore_groups_permutation_equivariant(xc, seed):
+    x, codes = xc
+    perm = np.random.default_rng(seed).permutation(len(x))
+    np.testing.assert_allclose(
+        zscore_groups(x[perm], codes[perm], Z_EPS),
+        zscore_groups(x, codes, Z_EPS)[perm],
+        rtol=0, atol=1e-12,
+    )
+
+
+def test_zscore_groups_one_value_group_is_nan():
+    z = zscore_groups(np.array([1.0, 2.0, 4.0, 7.0]), np.array([0, 0, 1, 0]), Z_EPS)
+    assert np.isnan(z[2])
+    assert not np.isnan(z[[0, 1, 3]]).any()
+
+
+@st.composite
+def long_features(draw):
+    """A long (p, column, statistic, value) frame: up to 10 partitions
+    (a null key among them when drawn) over up to 6 features; every
+    partition has the first feature, some other cells are missing."""
+    parts = [f"p{i}" for i in range(draw(st.integers(2, 10)))]
+    if draw(st.booleans()):
+        parts.append(None)
+    feats = [(f"c{i % 3}", f"s{i}") for i in range(draw(st.integers(1, 6)))]
+    rows = [
+        (p, c, s, draw(dyadic))
+        for p in parts
+        for i, (c, s) in enumerate(feats)
+        if i == 0 or draw(st.integers(0, 9)) > 0
+    ]
+    return pd.DataFrame(rows, columns=["p", "column", "statistic", "value"])
+
+
+@settings(max_examples=60, deadline=None)
+@given(z=long_features(), k=st.integers(1, 4), seed=st.integers(0, 2**32 - 1))
+def test_knn_scorer_self_distance_permutation_duplicates(z, k, seed):
+    """Every partition is its own nearest row (distance 0), and the
+    scores do not change when the long frame's rows are shuffled or
+    some of them repeated."""
+    feats, dists, _, scores = _knn_scores(z, "p", k)
+    assert len(feats) == z["p"].nunique(dropna=False)
+    assert (dists[:, 0] == 0.0).all()
+
+    rng = np.random.default_rng(seed)
+    shuffled = z.iloc[rng.permutation(len(z))]
+    repeated = pd.concat([z, z.iloc[rng.integers(0, len(z), size=len(z) // 2)]])
+    for other in (shuffled, repeated):
+        f2, _, _, s2 = _knn_scores(other, "p", k)
+        assert f2.equals(feats)
+        np.testing.assert_array_equal(s2, scores)

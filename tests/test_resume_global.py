@@ -99,7 +99,7 @@ def test_resume_without_hist_degrades_to_pending_scope(spark, table):
 
 def test_null_pending_partition_keeps_distribution_row(spark, table):
     """A pending partition with a null key keeps its distribution row on
-    resume, scored as in a full-table run."""
+    resume, scored as in a full-table run, and its drift row."""
     committed = [f"src{s}" for s in range(6)]
     nulled = table.withColumn(
         "source", F.when(F.col("source") != "src7", F.col("source"))
@@ -115,10 +115,12 @@ def test_null_pending_partition_keeps_distribution_row(spark, table):
         nulled.where(~F.col("source").isin(committed) | F.col("source").isNull()),
         hist_edges=EDGES,
         history_sketches=hsk,
-        compute_drift=False,
     )
     res_dist = _dist_map(res.distribution)
     assert set(res_dist) == {"src6", None}
+    drift_parts = [r["partition"] for r in res.drift.collect()]
+    assert len(drift_parts) == 2
+    assert set(drift_parts) == {"src6", None}
     full_dist = _dist_map(full.distribution)
     for p in res_dist:
         assert res_dist[p] == pytest.approx(full_dist[p], abs=1e-12)

@@ -63,6 +63,28 @@ def test_cosine_topk_chunked_queries(emb):
     assert np.allclose(one["cosine"], chunked["cosine"])
 
 
+@pytest.mark.parametrize("chunk", [1, 8192])
+def test_duplicate_query_ids_rank_each_neighbor_once(emb, chunk):
+    """A query id that occurs twice (across chunks at chunk size 1, in
+    one chunk at the default) gets each neighbor at one rank: the same
+    top-k as the query occurring once at the same chunk size."""
+    queries = emb.where(F.col("vec_id") < 3)
+    kw = dict(
+        corpus_id="vec_id", corpus_vec="embedding",
+        query_id="vec_id", query_vec="embedding", k=3, query_chunk_size=chunk,
+    )
+    cols = ["query_id", "rank"]
+    once = sim.cosine_topk(emb, queries, **kw).toPandas().sort_values(cols)
+    twice = (
+        sim.cosine_topk(emb, queries.unionByName(queries), **kw)
+        .toPandas()
+        .sort_values(cols)
+    )
+    assert twice["rank"].tolist() == once["rank"].tolist()
+    assert twice["neighbor_id"].tolist() == once["neighbor_id"].tolist()
+    assert np.allclose(twice["cosine"], once["cosine"], rtol=1e-12, atol=0)
+
+
 def test_chunked_broadcasts_do_not_accumulate(emb):
     """Round-4 hygiene item: every multi-chunk broadcast must be
     destroy()ed once its chunk's top-k is materialized — a 1,200-chunk

@@ -4,6 +4,10 @@ the same scale factor, compare row counts, column names, and values
 (order-insensitive, exact after float32 canonicalization).
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
+
+Exits 2 on a query name that ``queries()`` does not define, 1 if any
+query fails. The Spark session takes its core count from
+$SPARK_GRAFT_CPUS (else all local cores).
 """
 
 from __future__ import annotations
@@ -68,16 +72,23 @@ def main() -> None:
     import __spark_entry__ as e
     from gate_spark.session import get_spark
 
-    spark = get_spark("oracle_check", cores=8, shuffle_partitions=8)
+    qs, os_ = e.queries(), e.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown query names: {unknown}")
+        sys.exit(2)
+
+    spark = get_spark("oracle_check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs, os_ = e.queries(), e.oracle_sql()
     failed = []
+    ran = skipped = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        ran += 1
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir).toPandas()
@@ -88,6 +99,7 @@ def main() -> None:
         sql = os_.get(name)
         if sql is None:
             print(f"SKIP {name}: no oracle ({len(sdf)} rows)")
+            skipped += 1
             continue
         try:
             odf = con.execute(sql).fetchdf()
@@ -106,9 +118,9 @@ def main() -> None:
             print(f"OK   {name} ({len(sdf)} rows, {dt:.1f}s)")
     print()
     if failed:
-        print(f"{len(failed)} FAILED: {failed}")
+        print(f"{len(failed)} of {ran} queries FAILED: {failed}")
         sys.exit(1)
-    print("all queries match")
+    print(f"all {ran - skipped} of {ran} queries match ({skipped} without an oracle)")
 
 
 if __name__ == "__main__":
