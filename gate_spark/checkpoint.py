@@ -7,7 +7,7 @@ survive restarts, so each partition's completion is recorded as an
 append-only lineage row:
 
     (run_spec, partition, partition_spec, snapshot_id, status,
-     sketch_json, metrics_json, ts)
+     sketch_json, summary_json, metrics_json, ts)
 
 - ``run_spec`` is a stable hash of the validation spec (columns,
   constraints, thresholds): changing the spec invalidates prior
@@ -21,8 +21,14 @@ append-only lineage row:
   string so spec evolution invalidates nothing silently;
 - ``sketch_json`` carries the partition's mergeable sketch state
   (moments + HLL + histogram, see gate_spark/sketches.py): a resumed
-  run rebuilds GLOBAL statistics from lineage alone — zero rescan of
-  completed partitions;
+  run pools the committed fixed-edge histograms into its PSI/KS
+  holdout, and ``merged_stats_from_lineage`` rebuilds global
+  statistics — zero rescan of completed partitions;
+- ``summary_json`` carries the partition's summary rows
+  (``{"format": 1, "rows": [...]}``, see :func:`summary_to_json`): a
+  resumed run scores drift against them on every statistic, the
+  reference's ``previous_summaries`` contract, so its verdicts equal a
+  from-scratch run's;
 - the store itself is a parquet directory (Iceberg table in
   production — the API takes a path either way) of metadata-scale
   rows; appends are atomic per file, and duplicate completion rows
@@ -40,8 +46,9 @@ import hashlib
 import json
 import os
 import time
-import uuid
+from typing import Iterable, Mapping
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -56,6 +63,7 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("snapshot_id", T.StringType(), False),
         T.StructField("status", T.StringType(), False),
         T.StructField("sketch_json", T.StringType(), True),
+        T.StructField("summary_json", T.StringType(), True),
         T.StructField("metrics_json", T.StringType(), True),
         T.StructField("ts", T.DoubleType(), False),
     ]
@@ -144,13 +152,16 @@ class CheckpointStore:
         *,
         partition_spec: str | None = None,
         sketches: dict[str, str] | None = None,
+        summaries: dict[str, str] | None = None,
         snapshots: dict[str, str] | None = None,
     ) -> None:
         """Append completion rows (one atomic parquet file per call).
 
         ``sketches`` maps partition -> sketch_json payload
-        (sketches.sketches_to_json); ``partition_spec`` records the
-        input partitioning (e.g. ``"source"``) at commit time;
+        (sketches.sketches_to_json), ``summaries`` partition ->
+        summary_json payload (:func:`summary_to_json`);
+        ``partition_spec`` records the input partitioning (e.g.
+        ``"source"``) at commit time;
         ``snapshots`` overrides ``snapshot_id`` per partition (the
         per-partition stamp incremental path, see pending_by_stamps).
         """
@@ -163,6 +174,7 @@ class CheckpointStore:
                 (snapshots or {}).get(str(p), snapshot_id),
                 "completed",
                 (sketches or {}).get(str(p)),
+                (summaries or {}).get(str(p)),
                 json.dumps((metrics or {}).get(str(p), {})),
                 now,
             )
@@ -176,15 +188,17 @@ class CheckpointStore:
         run_spec: str,
         snapshot_id: str | None = None,
         stamps: dict[str, str] | None = None,
-    ) -> dict[str, str]:
-        """Latest committed sketch_json per partition — input to
-        ``sketches.sketches_from_json`` for the no-rescan global-stats
-        resume path. Filter by one global ``snapshot_id``, by
-        per-partition ``stamps`` (each partition must match its own
-        stamp), or neither (latest regardless of snapshot)."""
+    ) -> tuple[dict[str, str], dict[str, str]]:
+        """Latest committed sketch_json and summary_json per partition,
+        as two partition -> payload dicts from one lineage read (inputs
+        to ``sketches.sketches_from_json`` and :func:`summary_from_json`;
+        rows committed before summary_json existed are absent from the
+        second). Filter by one global ``snapshot_id``, by per-partition
+        ``stamps`` (each partition must match its own stamp), or neither
+        (latest regardless of snapshot)."""
         df = self._read()
         if df is None:
-            return {}
+            return {}, {}
         cond = (
             (F.col("run_spec") == run_spec)
             & (F.col("status") == "completed")
@@ -197,16 +211,19 @@ class CheckpointStore:
             .groupBy("partition")
             .agg(
                 F.max_by("sketch_json", "ts").alias("sketch_json"),
+                F.max_by("summary_json", "ts").alias("summary_json"),
                 F.max_by("snapshot_id", "ts").alias("snapshot_id"),
             )
             .collect()
         )
-        out = {}
+        sketches, summaries = {}, {}
         for r in rows:
             if stamps is not None and stamps.get(r["partition"]) != r["snapshot_id"]:
                 continue
-            out[r["partition"]] = r["sketch_json"]
-        return out
+            sketches[r["partition"]] = r["sketch_json"]
+            if r["summary_json"] is not None:
+                summaries[r["partition"]] = r["summary_json"]
+        return sketches, summaries
 
     def lineage(self) -> DataFrame:
         df = self._read()
@@ -281,9 +298,51 @@ def merged_stats_from_lineage(
     coverage, mean, stddev, min, max, ndv, hist, edges)."""
     from gate_spark import sketches as sk
 
-    payload = store.sketch_state(run_spec, snapshot_id, stamps)
+    payload, _ = store.sketch_state(run_spec, snapshot_id, stamps)
     return sk.merge_sketches(sk.sketches_from_json(store.spark, payload))
 
 
-def run_id() -> str:
-    return uuid.uuid4().hex[:12]
+SUMMARY_FORMAT = 1
+
+
+def summary_to_json(rows: Iterable[Mapping], partition_key: str) -> dict[str, str]:
+    """Summary rows (``Row.asDict()`` of ``Summary.df``) -> one
+    ``{"format": 1, "rows": [{"column": ..., <statistic>: ...}, ...]}``
+    summary_json per partition, keyed like lineage (``str`` of the key).
+    A float32 cell goes out as its float64 repr, which reads back to the
+    same bits; NaN and None go out as null."""
+    per_part: dict[str, list[dict]] = {}
+    for r in rows:
+        stats = {
+            k: None if v is None or v != v else float(v)
+            for k, v in r.items() if k not in (partition_key, "column")
+        }
+        per_part.setdefault(str(r[partition_key]), []).append({"column": r["column"], **stats})
+    return {
+        p: json.dumps({"format": SUMMARY_FORMAT, "rows": v}) for p, v in per_part.items()
+    }
+
+
+def summary_from_json(
+    payload: dict[str, str], partition_key: str, key_type: T.DataType
+) -> pd.DataFrame:
+    """summary_json payloads -> summary-format pandas rows (partition
+    key, ``column``, every statistic as float32, null as NaN). Lineage
+    stores partitions as strings, so an integral ``key_type`` (the live
+    summary's key type) turns them back into ints. Raises ``ValueError``
+    naming the partition for a payload of any other format."""
+    integral = isinstance(key_type, T.IntegralType)
+    records = []
+    for part, blob in payload.items():
+        doc = json.loads(blob)
+        fmt = doc.get("format") if isinstance(doc, dict) else None
+        if fmt != SUMMARY_FORMAT:
+            raise ValueError(
+                f"partition {part!r}: summary_json format {fmt!r} is not"
+                f" {SUMMARY_FORMAT}; re-validate the partition"
+            )
+        key = int(part) if integral else part
+        records += [{partition_key: key, **r} for r in doc["rows"]]
+    pdf = pd.DataFrame(records)
+    stats = [c for c in pdf.columns if c not in (partition_key, "column")]
+    return pdf.astype({s: "float32" for s in stats})

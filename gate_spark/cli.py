@@ -24,11 +24,11 @@ runs outside spark-submit. The job:
    token-array decode; ``--no-global-unique`` opts out), and with
    ``--sketch`` lineage, PSI/KS pools the committed partitions'
    checkpointed fixed-edge histograms into the holdout while drift
-   scores pending partitions against ALL partitions via sketch-derived
-   summary rows (restricted to the moments-exact statistic subset —
-   see pipeline.SKETCH_STATS). Without sketch lineage, distribution /
-   drift verdicts are pending-scoped (reported as ``global_checks`` in
-   the JSON summary line);
+   scores pending partitions against ALL partitions on their committed
+   summary rows, so a resumed run's drift verdicts equal a from-scratch
+   run's. Without sketch lineage, distribution / drift verdicts are
+   pending-scoped (reported as ``global_checks`` in the JSON summary
+   line);
 3. runs the one-scan ``validate_tokens`` pipeline on the pending
    partitions and writes verdicts / violations / summary / PSI-KS /
    drift to ``--output`` — per-partition dirs with dynamic partition
@@ -37,7 +37,8 @@ runs outside spark-submit. The job:
 4. commits per-partition lineage rows (snapshot-id, partition spec,
    metrics, and with ``--sketch`` the mergeable sketch state
    (gate_spark/sketches.py) that lets ``merged_stats_from_lineage``
-   rebuild global statistics with zero rescan);
+   rebuild global statistics with zero rescan, plus the partition's
+   summary rows that a later resume scores drift on);
 5. prints ONE machine-readable JSON summary line to stdout.
 """
 
@@ -150,7 +151,7 @@ def _get_session(args) -> SparkSession:
 
 def main(argv: list[str] | None = None) -> int:
     args = _build_parser().parse_args(argv)
-    from gate_spark.checkpoint import CheckpointStore, spec_hash
+    from gate_spark import checkpoint as ck
     from gate_spark.iceberg import current_snapshot_id, read_table
     from gate_spark.pipeline import validate_tokens
     from gate_spark import sketches as sk
@@ -173,7 +174,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     lo, hi = (int(x) for x in args.vocab.split(":"))
     domain = tuple(args.domain.split(",")) if args.domain else None
-    run_spec = spec_hash(
+    run_spec = ck.spec_hash(
         {
             k: v
             for k, v in vars(args).items()
@@ -187,7 +188,7 @@ def main(argv: list[str] | None = None) -> int:
         }
     )
 
-    store = CheckpointStore(spark, args.lineage) if args.lineage else None
+    store = ck.CheckpointStore(spark, args.lineage) if args.lineage else None
     all_parts = [
         str(r[0])
         for r in df.select(args.partition_key).distinct().orderBy(args.partition_key).collect()
@@ -225,8 +226,9 @@ def main(argv: list[str] | None = None) -> int:
 
     external_keys = None
     history_sketches = None
+    history_summary = None
     hist_edges = None
-    n_history = 0  # partitions actually present in the sketch payload
+    n_history = 0  # committed partitions with summary rows in lineage
     committed = [p for p in all_parts if p not in pending]
     if committed:
         # pushed-down membership filter -> partition pruning on a
@@ -242,16 +244,20 @@ def main(argv: list[str] | None = None) -> int:
                 F.col(args.partition_key).isin(committed)
             ).select(args.doc_id_col)
         if store is not None and args.sketch:
-            payload = store.sketch_state(
+            payload, summaries = store.sketch_state(
                 run_spec, None if stamps else snapshot, stamps or None
             )
             payload = {p: s for p, s in payload.items() if p in committed}
+            summaries = {p: s for p, s in summaries.items() if p in committed}
+            if summaries:
+                # the drift gate below counts the partitions that carry
+                # summary rows, which may be a subset of `committed`
+                n_history = len(summaries)
+                history_summary = ck.summary_from_json(
+                    summaries, args.partition_key,
+                    full_df.schema[args.partition_key].dataType,
+                )
             if payload:
-                # the drift gate below must count the partitions the
-                # sketch payload actually carries, not len(committed):
-                # only a subset of committed partitions may have
-                # committed sketch_json for this run_spec/stamp
-                n_history = len(payload)
                 history_sketches = sk.sketches_from_json(spark, payload)
                 erow = (
                     history_sketches.where(
@@ -278,6 +284,7 @@ def main(argv: list[str] | None = None) -> int:
         external_dup_keys=external_keys,
         hist_edges=hist_edges,
         history_sketches=history_sketches,
+        history_summary=history_summary,
     )
     # drift globality is claimed only when the history histograms were
     # ACTUALLY pooled into the PSI/KS holdout (result.history_pooled):
@@ -349,7 +356,7 @@ def main(argv: list[str] | None = None) -> int:
     _drop_partition_dirs(spark, f"{out}/violations", "partition", clean)
 
     if store:
-        payload = None
+        payload = summaries = None
         if args.sketch:
             payload = sk.sketches_to_json(
                 sk.column_sketches(
@@ -368,6 +375,11 @@ def main(argv: list[str] | None = None) -> int:
                     hist_edges={args.n_tok_col: result.hist_edges},
                 )
             )
+            # a future resume scores drift on these (cached) rows
+            summaries = ck.summary_to_json(
+                (r.asDict() for r in result.summary.df.collect()),
+                args.partition_key,
+            )
         store.mark_completed(
             pending,
             run_spec,
@@ -375,6 +387,7 @@ def main(argv: list[str] | None = None) -> int:
             metrics,
             partition_spec=args.partition_key,
             sketches=payload,
+            summaries=summaries,
             snapshots=stamps or None,
         )
     result.unpersist()

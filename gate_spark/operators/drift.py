@@ -193,8 +193,10 @@ class DriftResult:
         """cluster id -> member columns (gate/drift.py:129-142)."""
         if self._clustered_features is None:
             raise ValueError("No clustering was performed.")
-        grouped = self._clustered_features.groupby("cluster")["column"].agg(set).apply(list)
-        return grouped.to_dict()
+        return {
+            c: sorted(set(cols))
+            for c, cols in self._clustered_features.groupby("cluster")["column"]
+        }
 
     def verdict(self) -> dict:
         """Per-partition verdict row (north-rule output shape)."""
@@ -409,7 +411,6 @@ def drift_scores(
     k: int = 3,
     *,
     history: "pd.DataFrame | None" = None,
-    restrict_stats: list[str] | None = None,
 ) -> DataFrame:
     """Every partition's drift score + verdict as ONE DataFrame:
     (partition: string, score, score_percentile, is_drifted).
@@ -426,21 +427,17 @@ def drift_scores(
     summary. A null partition key is scored as a partition of its own
     and reported as a NULL ``partition``.
 
-    ``history``: extra summary-format rows (pandas; same partition-key
-    and column names) appended to the live summary before z-scoring —
-    the resume path scores pending partitions against ALL partitions by
-    reconstructing committed partitions' rows from checkpointed sketch
-    state (checkpoint.merged_stats_from_lineage lineage). Scores are
-    returned for every partition (live + history); the caller filters.
-    ``restrict_stats``: intersect the feature space with these
-    statistic names — sketch state carries exact moments but not
-    occurrence_ratio/quantiles, so global-resume scoring restricts both
-    sides to the shared feature set (documented narrowing).
+    ``history``: earlier partitions' summary rows (pandas, summary
+    format: same partition key, ``column`` and statistic columns),
+    appended to the live summary before z-scoring — the reference's
+    ``previous_summaries``. The resume path passes the committed
+    partitions' rows from lineage (checkpoint.summary_from_json), so
+    every partition scores as in one summary of the whole table (equal
+    up to float rounding of the row order). Scores are returned for every partition (live + history);
+    the caller filters.
     """
     pk = summary.partition_key
     statistics = summary.statistics()
-    if restrict_stats is not None:
-        statistics = [s for s in statistics if s in restrict_stats]
     pdf = summary.df.toPandas()
     if history is not None and len(history):
         pdf = pd.concat(

@@ -6,20 +6,15 @@ nearest of C coarse centroids (trained on a driver-side sample), the
 query probes only the ``nprobe`` nearest cells, and the candidate set
 shrinks by ~C/nprobe.
 
-Two scoring implementations, selected by ``impl``:
-
-- ``"arrow"`` (default, scale path): all vector math is Arrow-batched
-  numpy — one ``(batch x dim) @ (dim x queries)`` matmul per Arrow
-  batch against a broadcast query matrix, with per-batch partial top-k
-  (``O(batch)`` argpartition-style selection) so the final shuffle
-  carries ``batches x queries x k`` candidate rows, NOT the
-  ``|corpus| x |queries|`` score table, and no full sort ever runs
-  over it.
-- ``"hof"`` (oracle-parity mode): Catalyst ``zip_with``/``aggregate``
-  sequential-fold expressions whose double-precision evaluation order a
-  DuckDB ``list_sum(list_transform(...))`` twin reproduces bit-for-bit.
-  Higher-order functions are CodegenFallback (interpreted, boxed per
-  element) — correctness gate only, never the 100 TB path.
+All vector math is Arrow-batched numpy: one ``(batch x dim) @ (dim x
+queries)`` matmul per Arrow batch against a broadcast query matrix,
+with per-batch partial top-k (``O(batch)`` argpartition-style
+selection), so the final shuffle carries ``batches x queries x k``
+candidate rows, NOT the ``|corpus| x |queries|`` score table, and no
+full sort ever runs over it. ``cosine_expr`` is the Catalyst
+sequential-fold twin of the same cosine, whose double-precision
+evaluation order a DuckDB ``list_sum(list_transform(...))`` reproduces
+bit-for-bit; ``dedup``'s ``"md5"`` oracle mode verifies pairs with it.
 """
 
 from __future__ import annotations
@@ -162,7 +157,6 @@ def cosine_topk(
     query_id: str,
     query_vec: str,
     k: int = 10,
-    impl: str = "arrow",
     query_chunk_size: int = 8192,
 ) -> DataFrame:
     """Exact brute-force cosine top-k: (query_id, neighbor_id, cosine,
@@ -176,30 +170,14 @@ def cosine_topk(
     ``ceil(|queries|/chunk)`` corpus scans with per-task score-matrix
     width capped at ``batch x chunk`` — no contract cliff.
 
-    ``impl="arrow"``: per Arrow batch, scores = ``(X @ Q.T) / outer
-    (|x|, |q|)`` — a single BLAS matmul — followed by in-batch partial
-    top-k, so neither the |corpus| x |queries| score table nor a full
-    window sort ever materializes. ``impl="hof"`` keeps the
-    oracle-reproducible sequential-fold expression plan.
+    Per Arrow batch, scores = ``(X @ Q.T) / outer(|x|, |q|)`` — a
+    single BLAS matmul — followed by in-batch partial top-k, so neither
+    the |corpus| x |queries| score table nor a full window sort ever
+    materializes.
     """
     q = queries.select(
         F.col(query_id).alias("query_id"), F.col(query_vec).alias("_qv")
     )
-    if impl == "hof":
-        c = corpus.select(
-            F.col(corpus_id).alias("neighbor_id"), F.col(corpus_vec).alias("_cv")
-        )
-        scored = (
-            c.join(F.broadcast(q))
-            .where(F.col("neighbor_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                cosine_expr(F.col("_qv"), F.col("_cv")).alias("cosine"),
-            )
-        )
-        return _finish_topk(scored, k)
-
     spark = corpus.sparkSession
     qid_type = queries.schema[query_id].dataType
     nid_type = corpus.schema[corpus_id].dataType
@@ -382,7 +360,6 @@ def ivf_topk(
     num_cells: int = 16,
     nprobe: int = 2,
     centroids: np.ndarray | DataFrame | None = None,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Approximate cosine top-k via IVF cells: corpus rows are joined
     only against queries probing their cell. Same output schema as
@@ -394,10 +371,9 @@ def ivf_topk(
     None to train k-means on a corpus sample. Cell ids are row indices
     0..C-1.
 
-    ``impl="arrow"`` scores candidate pairs with the Arrow-batched
-    einsum UDF and reduces them with per-batch partial top-k before the
-    final (metadata-scale) exact top-k; ``impl="hof"`` is the
-    interpreted sequential-fold oracle-parity mode.
+    Candidate pairs are scored with the Arrow-batched einsum UDF and
+    reduced with per-batch partial top-k before the final
+    (metadata-scale) exact top-k.
     """
     spark = corpus.sparkSession
     if centroids is None:
@@ -417,16 +393,10 @@ def ivf_topk(
         F.col(query_vec).alias("_qv"),
         F.explode(query_cells(F.col(query_vec))).alias("cell"),
     )
-    score = (
-        cosine_expr(F.col("_qv"), F.col("_cv"))
-        if impl == "hof"
-        else cosine_pairs_udf()(F.col("_qv"), F.col("_cv"))
-    )
+    score = cosine_pairs_udf()(F.col("_qv"), F.col("_cv"))
     scored = (
         c.join(F.broadcast(q), "cell")
         .where(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", score.alias("cosine"))
     )
-    if impl != "hof":
-        scored = _partial_topk(scored, k)
-    return _finish_topk(scored, k)
+    return _finish_topk(_partial_topk(scored, k), k)

@@ -12,15 +12,14 @@ Why this topology at 100 TB: the dominant cost is decoding the
 violations, and histograms as independent jobs re-decodes the arrays
 once each (4x the scan bill); extracting every array-derived value in
 one pass makes all substreams metadata-light. On a cluster the slim
-frame would be written to a scratch table instead of memory — the
-``materialize`` hook supports that.
+frame would be written to a scratch table instead of memory.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark import StorageLevel
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -31,15 +30,6 @@ from gate_spark.operators.distribution import (
     psi_ks_from_histogram,
 )
 from gate_spark.operators.drift import drift_scores
-
-
-# summary statistics reconstructible exactly from mergeable sketch
-# moments (occurrence_ratio and quantiles are not): the shared feature
-# space for global-resume drift scoring.
-SKETCH_STATS = [
-    "coverage", "mean", "num_unique_values", "count", "max", "min",
-    "null_fraction", "stddev",
-]
 
 
 @dataclass
@@ -94,7 +84,6 @@ def validate_tokens(
     compute_drift: bool = True,
     psi_threshold: float = 0.2,
     ks_threshold: float = 0.2,
-    truncate_lineage: bool = False,
     broadcast_dupes_threshold: int = 2_000_000,
     external_dup_keys: DataFrame | None = None,
     occ_value_mode: str = "hash",  # 64-bit value fingerprints as the keys
@@ -105,6 +94,7 @@ def validate_tokens(
     # "exact" to key by native values (bit-exact SQL-parity comparisons).
     hist_edges: list[float] | None = None,
     history_sketches: DataFrame | None = None,
+    history_summary: pd.DataFrame | None = None,
 ) -> TokenValidationResult:
     """One-scan validation of a (doc_id, tokens, n_tok, source) table.
 
@@ -128,13 +118,16 @@ def validate_tokens(
     - ``history_sketches``: sketches.SKETCH_SCHEMA rows for committed
       partitions (from checkpoint.CheckpointStore.sketch_state). PSI/KS
       then pools the committed partitions' fixed-edge histograms into
-      the holdout, and drift scores pending partitions against ALL
-      partitions via sketch-derived summary rows, restricted to the
-      ``SKETCH_STATS`` feature subset (occurrence_ratio / quantiles are
-      not reconstructible from moments — documented narrowing). Rows
-      for committed partitions are filtered OUT of the returned
-      ``distribution`` / ``drift`` tables: their verdicts stand from
-      the run that validated them.
+      the holdout.
+    - ``history_summary``: the committed partitions' summary rows
+      (pandas, summary format — checkpoint.summary_from_json of the
+      lineage's summary_json). Drift then scores pending partitions
+      against ALL partitions on every statistic, with the same verdicts
+      as a from-scratch run over the whole table.
+
+    Rows for committed partitions are filtered OUT of the returned
+    ``distribution`` / ``drift`` tables: their verdicts stand from the
+    run that validated them.
     """
     from gate_spark.operators.summarize import _qident, _qlit, _sql_lit
 
@@ -177,17 +170,7 @@ def validate_tokens(
         f"CASE WHEN {f_vocab} THEN array_min({tk}) END AS _vmin",
         f"CASE WHEN {f_vocab} THEN array_max({tk}) END AS _vmax",
     )
-    if truncate_lineage:
-        # MEMORY_AND_DISK: at bench scale the slim frame can exceed the
-        # storage fraction; spilled columnar batches beat recompute.
-        # (This used to be localCheckpoint, which jstack profiling
-        # exposed as the 32-thread scaling inverter: deserialized
-        # object rows, ~200 B/row, unreleasable blocks. The columnar
-        # SQL cache is ~10x more compact and releases cleanly; on a
-        # cluster this is "write slim to a scratch table".)
-        slim = slim.persist(StorageLevel.MEMORY_AND_DISK)
-    else:
-        slim = slim.persist()
+    slim = slim.persist()
     # Materialize the cache with the ONE action that also yields the
     # per-partition row counts (metadata-scale collect: one row per
     # partition). The counts let verdicts be DERIVED from the
@@ -413,7 +396,7 @@ def validate_tokens(
     # no n_tok at all (all null, or an empty table): nothing to bin, so
     # unit-range edges
     nt_range = (float(min(nt_mins)), float(max(nt_maxs))) if nt_mins else (0.0, 1.0)
-    distribution, history_parts, edges, pooled = _compute_distribution(
+    distribution, edges, pooled = _compute_distribution(
         slim, n_tok_col, hist_edges, history_sketches,
         num_bins, psi_threshold, ks_threshold, nt_range,
     )
@@ -421,14 +404,11 @@ def validate_tokens(
     # one collect of the cached metadata-scale summary, scored driver-side
     drift = None
     if compute_drift:
-        if history_sketches is not None:
-            hist_pdf = _history_summary_pdf(history_sketches, partition_key)
-            drift = drift_scores(
-                summary, k=drift_k, history=hist_pdf, restrict_stats=SKETCH_STATS
+        drift = drift_scores(summary, k=drift_k, history=history_summary)
+        if history_summary is not None:
+            drift = _drop_committed(
+                drift, sorted({str(p) for p in history_summary[partition_key]})
             )
-            drift = _drop_committed(drift, history_parts)
-        else:
-            drift = drift_scores(summary, k=drift_k)
 
     return TokenValidationResult(
         summary=summary,
@@ -465,7 +445,7 @@ def _compute_distribution(
             pooled = True
             hist = hist.unionByName(hh)
     distribution = psi_ks_from_histogram(hist, psi_threshold, ks_threshold)
-    return _drop_committed(distribution, history_parts), history_parts, edges, pooled
+    return _drop_committed(distribution, history_parts), edges, pooled
 
 
 def _drop_committed(df: DataFrame, history_parts: list[str]) -> DataFrame:
@@ -506,27 +486,3 @@ def _history_histograms(
         local_df(spark, out, "partition string, bin int, bin_count long"),
         parts,
     )
-
-
-def _history_summary_pdf(history_sketches: DataFrame, partition_key: str):
-    """Summary-format pandas rows (SKETCH_STATS feature set) for
-    committed partitions, derived from their mergeable sketch moments —
-    the no-rescan half of global drift scoring on resume."""
-    from gate_spark.sketches import merge_sketches
-
-    per_part = merge_sketches(history_sketches, by=["partition"])
-    pdf = per_part.select(
-        F.col("partition").alias(partition_key),
-        "column",
-        "coverage",
-        "mean",
-        F.col("ndv").cast("double").alias("num_unique_values"),
-        F.col("n").cast("double").alias("count"),
-        "max",
-        "min",
-        (1.0 - F.col("n").cast("double") / F.col("rows").cast("double")).alias(
-            "null_fraction"
-        ),
-        "stddev",
-    ).toPandas()
-    return pdf

@@ -137,17 +137,16 @@ def column_sketches(
     ).select("partition", "_s.*")
 
 
-def merge_sketches(sketches: DataFrame, by: list[str] | None = None) -> DataFrame:
+def merge_sketches(sketches: DataFrame) -> DataFrame:
     """Merge sketch rows across partitions (or any subset): grouped by
-    ``column`` (+ optional extra keys), returning the merged state plus
-    the derived statistics (coverage, mean, stddev, ndv).
+    ``column``, returning the merged state plus the derived statistics
+    (coverage, mean, stddev, ndv).
 
     Histogram merge is element-wise addition via a fold over
     ``collect_list`` — safe because the sketch table is metadata-scale
     (partitions x columns rows), never data-scale.
     """
-    keys = ["column"] + list(by or [])
-    merged = sketches.groupBy(*keys).agg(
+    merged = sketches.groupBy("column").agg(
         F.sum("rows").alias("rows"),
         F.sum("n").alias("n"),
         F.sum("sum").alias("sum"),
@@ -167,7 +166,7 @@ def merge_sketches(sketches: DataFrame, by: list[str] | None = None) -> DataFram
     n = F.col("n").cast("double")
     var = (F.col("sumsq") - F.col("sum") * F.col("sum") / n) / (n - 1)
     return merged.select(
-        *keys,
+        "column",
         "rows",
         "n",
         (n / F.col("rows").cast("double")).alias("coverage"),

@@ -3,19 +3,24 @@
 These pin algebraic invariants the example-based suites cannot sweep:
 KLL rank-error and merge-order invariance, percentile_of_score's
 scipy-rank semantics, histogram-quantile monotonicity/bounds, the
-nearest-rank rule, the PSI/KS kernel's identities and bounds, and the
-z-score kernel and kNN scorer behind every drift entry point. No
-SparkSession — the kernels run driver-side or inside Arrow batches, so
+nearest-rank rule, the PSI/KS kernel's identities and bounds, the
+z-score kernel and kNN scorer behind every drift entry point, and the
+lineage summary_json round trip. No SparkSession — the kernels run driver-side or inside Arrow batches, so
 the properties hold wherever they execute.
 """
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 import pandas as pd
-from hypothesis import given, settings
+import pytest
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import types as T
 
+from gate_spark.checkpoint import summary_from_json, summary_to_json
 from gate_spark.kernels import percentile_of_score, psi_ks, zscore_groups
 from gate_spark.operators.drift import Z_EPS, _knn_scores
 from gate_spark.kll import KLLSketch
@@ -281,3 +286,62 @@ def test_knn_scorer_self_distance_permutation_duplicates(z, k, seed):
         f2, _, _, s2 = _knn_scores(other, "p", k)
         assert f2.equals(feats)
         np.testing.assert_array_equal(s2, scores)
+
+
+# ------------------------------------------------- lineage summary_json
+
+SUMMARY_STATS = ["mean", "stddev", "p50"]
+f32_cell = st.one_of(
+    st.none(),
+    st.floats(width=32, allow_nan=True, allow_infinity=True, allow_subnormal=True),
+)
+
+
+@st.composite
+def summary_records(draw):
+    """Collected summary rows (dicts, as ``Row.asDict()`` gives them)
+    for 1-4 partitions keyed by int or string, 1-3 columns each, every
+    statistic a float32 value or None."""
+    integral = draw(st.booleans())
+    ids = draw(st.lists(st.integers(-2**40, 2**40), min_size=1, max_size=4, unique=True))
+    rows = [
+        {"k": i if integral else f"s{i}", "column": f"c{j}",
+         **{s: draw(f32_cell) for s in SUMMARY_STATS}}
+        for i in ids
+        for j in range(draw(st.integers(1, 3)))
+    ]
+    return integral, rows
+
+
+@settings(max_examples=100, deadline=None)
+@given(data=summary_records())
+@example(data=(True, [{"k": 3, "column": "c", "mean": 1e-45, "stddev": float("inf"),
+                       "p50": float("-inf")},
+                      {"k": 3, "column": "d", "mean": float("nan"), "stddev": None,
+                       "p50": -0.0}]))
+def test_summary_json_round_trip_bit_exact(data):
+    """summary_json round trip: float32 cells come back bit for bit
+    (±inf, subnormals and -0.0 included), NaN and None come back as NaN,
+    and keys come back with their own type."""
+    integral, rows = data
+    pdf = summary_from_json(
+        summary_to_json(rows, "k"), "k", T.LongType() if integral else T.StringType()
+    )
+    assert pdf["k"].tolist() == [r["k"] for r in rows]
+    assert pdf["column"].tolist() == [r["column"] for r in rows]
+    for s in SUMMARY_STATS:
+        got = pdf[s].to_numpy()
+        want = np.array([np.nan if r[s] is None else r[s] for r in rows], dtype=np.float32)
+        assert got.dtype == np.float32
+        nan = np.isnan(want)
+        np.testing.assert_array_equal(np.isnan(got), nan)
+        np.testing.assert_array_equal(got[~nan].view(np.uint32), want[~nan].view(np.uint32))
+
+
+def test_summary_json_unknown_format_raises():
+    """A payload of any other format fails loudly, naming the partition,
+    instead of resuming drift on statistics it cannot read."""
+    rows = [{"column": "n_tok", "mean": 1.0}]
+    for blob in (json.dumps({"format": 2, "rows": rows}), json.dumps(rows)):
+        with pytest.raises(ValueError, match="src3"):
+            summary_from_json({"src3": blob}, "source", T.StringType())

@@ -1,7 +1,9 @@
 """Resume must not narrow global checks (ADVICE r2): with sketch
 lineage, a pruned run's PSI/KS and drift for pending partitions are
-computed against ALL partitions — and, because fixed-edge histograms
-merge exactly, the PSI/KS values are bit-equal to a full-table run."""
+computed against ALL partitions — because fixed-edge histograms merge
+exactly, the PSI/KS values are bit-equal to a full-table run, and
+because drift scores on the committed partitions' own summary rows, its
+verdicts equal a full-table run's."""
 
 from __future__ import annotations
 
@@ -9,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gate_spark import sketches as sk
+from gate_spark.checkpoint import summary_from_json, summary_to_json
 from gate_spark.pipeline import validate_tokens
 
 EDGES = [8.0, 12.0, 16.0, 20.0]
@@ -34,12 +37,34 @@ def _dist_map(dist_df):
     }
 
 
-def test_resumed_distribution_matches_full_run(spark, table):
-    committed = [f"src{s}" for s in range(6)]
-    pending = ["src6", "src7"]
+def _committed_summary(df, committed):
+    """The committed partitions' summary rows as a resume reads them:
+    summarized by their own validate_tokens run, then through the
+    lineage summary_json round trip."""
+    run = validate_tokens(
+        df.where(F.col("source").isin(committed)), hist_edges=EDGES,
+        compute_drift=False,
+    )
+    rows = [r.asDict() for r in run.summary.df.collect()]
+    run.unpersist()
+    return summary_from_json(
+        summary_to_json(rows, "source"), "source", df.schema["source"].dataType
+    )
+
+
+def _drift_map(drift_df):
+    return {
+        r["partition"]: (r["score"], r["score_percentile"], r["is_drifted"])
+        for r in drift_df.collect()
+    }
+
+
+def _resume_matches_full_run(table, committed, pending):
+    pending_str = {str(p) for p in pending}
 
     full = validate_tokens(table, hist_edges=EDGES, compute_drift=True)
     full_dist = _dist_map(full.distribution)
+    full_drift = _drift_map(full.drift)
 
     hsk = sk.column_sketches(
         table.where(F.col("source").isin(committed)).select(
@@ -53,24 +78,41 @@ def test_resumed_distribution_matches_full_run(spark, table):
         table.where(F.col("source").isin(pending)),
         hist_edges=EDGES,
         history_sketches=hsk,
+        history_summary=_committed_summary(table, committed),
         compute_drift=True,
     )
     res_dist = _dist_map(res.distribution)
 
     # only pending partitions are (re)reported...
-    assert set(res_dist) == set(pending)
+    assert set(res_dist) == pending_str
     # ...but scored against the FULL holdout: exact match to the
     # full-table run (shared edges -> histogram merge is exact)
-    for p in pending:
+    for p in pending_str:
         assert res_dist[p][0] == pytest.approx(full_dist[p][0], abs=1e-12)
         assert res_dist[p][1] == pytest.approx(full_dist[p][1], abs=1e-12)
 
-    # drift is scored against all 8 partitions but reported for pending
-    drift_parts = {r["partition"] for r in res.drift.collect()}
-    assert drift_parts == set(pending)
+    # drift is scored against all 8 partitions on every statistic but
+    # reported for pending: the full-table run's scores and verdicts
+    res_drift = _drift_map(res.drift)
+    assert set(res_drift) == pending_str
+    for p in pending_str:
+        assert res_drift[p][0] == pytest.approx(full_drift[p][0], abs=1e-9)
+        assert res_drift[p][1:] == full_drift[p][1:]
+    assert full_drift[str(pending[0])][2]  # the shifted partition
 
     full.unpersist()
     res.unpersist()
+
+
+def test_resumed_distribution_matches_full_run(spark, table):
+    _resume_matches_full_run(table, [f"src{s}" for s in range(6)], ["src6", "src7"])
+
+
+def test_resumed_drift_matches_full_run_int_key(spark, table):
+    """Lineage stores partitions as strings; an integral key comes back
+    as the live summary's type, so the two summaries stack."""
+    int_keyed = table.withColumn("source", F.expr("CAST(substr(source, 4) AS INT)"))
+    _resume_matches_full_run(int_keyed, list(range(6)), [6, 7])
 
 
 def test_resume_without_hist_degrades_to_pending_scope(spark, table):
@@ -115,6 +157,7 @@ def test_null_pending_partition_keeps_distribution_row(spark, table):
         nulled.where(~F.col("source").isin(committed) | F.col("source").isNull()),
         hist_edges=EDGES,
         history_sketches=hsk,
+        history_summary=_committed_summary(nulled, committed),
     )
     res_dist = _dist_map(res.distribution)
     assert set(res_dist) == {"src6", None}

@@ -160,8 +160,9 @@ def test_interrupted_run_resumes_and_merges_globally(spark, docs, tmp_path):
 
 
 def test_old_lineage_schema_still_reads(spark, tmp_path):
-    """Stores written before partition_spec/sketch_json existed read as
-    nulls — completion queries and sketch_state degrade gracefully."""
+    """Stores written before partition_spec/sketch_json/summary_json
+    existed read as nulls — completion queries and sketch_state degrade
+    gracefully."""
     path = str(tmp_path / "old")
     spark.createDataFrame(
         [("rs", "p0", "snap", "completed", "{}", 1.0)],
@@ -170,12 +171,12 @@ def test_old_lineage_schema_still_reads(spark, tmp_path):
     ).write.parquet(path)
     store = CheckpointStore(spark, path)
     assert store.completed_partitions("rs", "snap") == {"p0"}
-    assert store.sketch_state("rs", "snap") == {}
+    assert store.sketch_state("rs", "snap") == ({}, {})
     store.mark_completed(
         ["p1"], "rs", "snap", partition_spec="source", sketches={"p1": "[]"}
     )
     assert store.completed_partitions("rs", "snap") == {"p0", "p1"}
-    assert store.sketch_state("rs", "snap") == {"p1": "[]"}
+    assert store.sketch_state("rs", "snap") == ({"p1": "[]"}, {})
 
 
 # ----------------------------------------------------------- KLL sketch

@@ -13,6 +13,7 @@ import shutil
 import subprocess
 import sys
 
+import numpy as np
 import pyspark
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
@@ -214,6 +215,54 @@ def test_cli_max_partitions_per_run(spark, tmp_path, capsys):
     assert len({j["run_spec"] for j in (j1, j2, j3, j4)}) == 1
     verdicts = spark.read.parquet(f"{out}/verdicts")
     assert verdicts.select("partition").distinct().count() == 20
+
+
+def test_cli_resumed_drift_matches_one_shot(spark, tmp_path, capsys):
+    """A run that commits 6 partitions and a resume that validates the
+    other 2 write the same drift rows for those 2 as one run over all 8:
+    the resume scores on the committed partitions' summary rows from
+    lineage."""
+    import json as _json
+
+    from gate_spark.cli import main
+
+    data = str(tmp_path / "tok")
+    rows = [
+        (f"d-{s}-{i}", list(range(n)), n, f"src{s}")
+        for s in range(8)
+        for i in range(120)
+        # src6 is shifted longer: the drifted pending partition
+        for n in [6 + (i % 12) + (8 if s == 6 else 0)]
+    ]
+    spark.createDataFrame(
+        rows, "doc_id string, tokens array<int>, n_tok int, source string"
+    ).write.partitionBy("source").parquet(data)
+
+    def run(name, extra=()):
+        out = str(tmp_path / name)
+        assert main([
+            "--input", data, "--output", out, "--lineage", str(tmp_path / f"{name}-lin"),
+            "--sketch", "--local-cores", "8", *extra,
+        ]) == 0
+        return _json.loads(
+            [l for l in capsys.readouterr().out.splitlines() if l.startswith("{")][-1]
+        )
+
+    def drift_rows(name):
+        pdf = spark.read.parquet(str(tmp_path / name / "drift")).toPandas()
+        pdf = pdf[pdf["partition"].isin(["src6", "src7"])]
+        return pdf.sort_values("partition").reset_index(drop=True)
+
+    assert run("resumed", ["--max-partitions-per-run", "6"])["pending"] == 6
+    j = run("resumed")
+    assert j["pending"] == 2 and j["global_checks"] == "unique+drift"
+    assert run("oneshot")["pending"] == 8
+
+    resumed, oneshot = drift_rows("resumed"), drift_rows("oneshot")
+    assert resumed["partition"].tolist() == ["src6", "src7"]
+    assert resumed["is_drifted"].tolist() == oneshot["is_drifted"].tolist() == [True, False]
+    assert resumed["score_percentile"].tolist() == oneshot["score_percentile"].tolist()
+    np.testing.assert_allclose(resumed["score"], oneshot["score"], rtol=0, atol=1e-9)
 
 
 def test_escape_path_name_matches_spark(spark, tmp_path):
