@@ -29,30 +29,36 @@ append-only lineage row:
   resumed run scores drift against them on every statistic, the
   reference's ``previous_summaries`` contract, so its verdicts equal a
   from-scratch run's;
-- the store itself is a parquet directory (Iceberg table in
-  production — the API takes a path either way) of metadata-scale
-  rows; appends are atomic per file, and duplicate completion rows
-  are harmless (latest-wins on read).
+- the store itself is a parquet directory at any Hadoop URI (local
+  path, ``file:``, ``hdfs:``, ``s3a:``; a store not written yet reads
+  as empty) of metadata-scale rows; appends are atomic per file, and
+  duplicate completion rows are harmless (latest-wins on read).
 
-Resume contract: ``pending_partitions`` = all input partitions minus
-those with a committed row for (run_spec, snapshot_id); re-running a
-finished job is a no-op and re-emitting a partition's verdict is
-idempotent.
+Resume contract, one read and one rule: ``pending_partitions`` reads
+each partition's latest completed row for the run spec, and a
+partition is committed iff that row's ``snapshot_id`` equals the
+partition's current stamp (its own stamp when the input has
+per-partition stamps, else the global snapshot). Every other input
+partition is pending. The same read returns the committed partitions'
+``sketch_json``/``summary_json``. Re-running a finished job is a no-op,
+re-emitting a partition's verdict is idempotent, and going back to an
+earlier snapshot re-validates (the outputs hold the later snapshot's
+verdicts).
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-import os
 import time
 from typing import Iterable, Mapping
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from gate_spark.iceberg import hadoop_fs
 from gate_spark.localframe import local_df
 
 LINEAGE_SCHEMA = T.StructType(
@@ -83,65 +89,40 @@ class CheckpointStore:
         self.spark = spark
         self.path = path
 
-    def _read(self) -> DataFrame | None:
-        if not self._exists():
-            return None
+    def lineage(self) -> DataFrame:
+        """Every lineage row; a store that does not exist yet reads as
+        empty. Any Hadoop URI works."""
+        fs, path = hadoop_fs(self.spark, self.path)
+        if not fs.exists(path):
+            return self.spark.createDataFrame([], LINEAGE_SCHEMA)
         return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.path)
 
-    def _exists(self) -> bool:
-        try:
-            return any(
-                f.endswith(".parquet") for f in os.listdir(self.path)
-            ) or any(
-                os.path.isdir(os.path.join(self.path, d)) for d in os.listdir(self.path)
-            )
-        except FileNotFoundError:
-            return False
-
-    def completed_partitions(self, run_spec: str, snapshot_id: str) -> set[str]:
-        df = self._read()
-        if df is None:
-            return set()
-        rows = (
-            df.where(
-                (F.col("run_spec") == run_spec)
-                & (F.col("snapshot_id") == snapshot_id)
-                & (F.col("status") == "completed")
-            )
-            .select("partition")
-            .distinct()
-            .collect()
-        )
-        return {r[0] for r in rows}
-
     def pending_partitions(
-        self, all_partitions: list[str], run_spec: str, snapshot_id: str
-    ) -> list[str]:
-        done = self.completed_partitions(run_spec, snapshot_id)
-        return [p for p in all_partitions if str(p) not in done]
+        self, stamps: Mapping[str, str], run_spec: str
+    ) -> tuple[list[str], dict[str, Row]]:
+        """The lineage read and the resume rule (module docstring).
+        ``stamps`` maps each input partition to its current snapshot
+        stamp. Returns ``(pending, committed)``: the partitions of
+        ``stamps``, in its order, that are not committed, and each
+        committed partition's latest row (``snapshot_id``,
+        ``sketch_json``, ``summary_json``)."""
+        committed = _committed(stamps, self._latest(run_spec))
+        return [p for p in stamps if p not in committed], committed
 
-    def pending_by_stamps(
-        self, stamps: dict[str, str], run_spec: str
-    ) -> list[str]:
-        """Per-partition incremental resume: given each partition's OWN
-        snapshot stamp (iceberg.partition_snapshot_stamps), a partition
-        is pending unless its latest committed row matches its current
-        stamp — an append to one partition re-validates that partition
-        alone, not the whole table."""
-        df = self._read()
-        if df is None:
-            return sorted(stamps)
+    def _latest(self, run_spec: str) -> dict[str, Row]:
+        """Each partition's latest completed row for ``run_spec``."""
         rows = (
-            df.where(
-                (F.col("run_spec") == run_spec)
-                & (F.col("status") == "completed")
-            )
+            self.lineage()
+            .where((F.col("run_spec") == run_spec) & (F.col("status") == "completed"))
             .groupBy("partition")
-            .agg(F.max_by("snapshot_id", "ts").alias("snapshot_id"))
+            .agg(
+                F.max_by(
+                    F.struct("snapshot_id", "sketch_json", "summary_json"), "ts"
+                ).alias("row")
+            )
             .collect()
         )
-        latest = {r["partition"]: r["snapshot_id"] for r in rows}
-        return sorted(p for p, s in stamps.items() if latest.get(str(p)) != s)
+        return {r["partition"]: r["row"] for r in rows}
 
     def mark_completed(
         self,
@@ -163,7 +144,7 @@ class CheckpointStore:
         ``partition_spec`` records the input partitioning (e.g.
         ``"source"``) at commit time;
         ``snapshots`` overrides ``snapshot_id`` per partition (the
-        per-partition stamp incremental path, see pending_by_stamps).
+        stamp map that :meth:`pending_partitions` was given).
         """
         now = time.time()
         rows = [
@@ -182,54 +163,6 @@ class CheckpointStore:
         ]
         df = local_df(self.spark, rows, LINEAGE_SCHEMA)
         df.coalesce(1).write.mode("append").parquet(self.path)
-
-    def sketch_state(
-        self,
-        run_spec: str,
-        snapshot_id: str | None = None,
-        stamps: dict[str, str] | None = None,
-    ) -> tuple[dict[str, str], dict[str, str]]:
-        """Latest committed sketch_json and summary_json per partition,
-        as two partition -> payload dicts from one lineage read (inputs
-        to ``sketches.sketches_from_json`` and :func:`summary_from_json`;
-        rows committed before summary_json existed are absent from the
-        second). Filter by one global ``snapshot_id``, by per-partition
-        ``stamps`` (each partition must match its own stamp), or neither
-        (latest regardless of snapshot)."""
-        df = self._read()
-        if df is None:
-            return {}, {}
-        cond = (
-            (F.col("run_spec") == run_spec)
-            & (F.col("status") == "completed")
-            & F.col("sketch_json").isNotNull()
-        )
-        if snapshot_id is not None:
-            cond = cond & (F.col("snapshot_id") == snapshot_id)
-        rows = (
-            df.where(cond)
-            .groupBy("partition")
-            .agg(
-                F.max_by("sketch_json", "ts").alias("sketch_json"),
-                F.max_by("summary_json", "ts").alias("summary_json"),
-                F.max_by("snapshot_id", "ts").alias("snapshot_id"),
-            )
-            .collect()
-        )
-        sketches, summaries = {}, {}
-        for r in rows:
-            if stamps is not None and stamps.get(r["partition"]) != r["snapshot_id"]:
-                continue
-            sketches[r["partition"]] = r["sketch_json"]
-            if r["summary_json"] is not None:
-                summaries[r["partition"]] = r["summary_json"]
-        return sketches, summaries
-
-    def lineage(self) -> DataFrame:
-        df = self._read()
-        if df is None:
-            return self.spark.createDataFrame([], LINEAGE_SCHEMA)
-        return df
 
 
 def resumable_run(
@@ -261,9 +194,10 @@ def resumable_run(
             str(r[0])
             for r in df.select(partition_key).distinct().orderBy(partition_key).collect()
         ]
-    todo = store.pending_partitions(partitions, run_spec, snapshot_id)
+    stamps = dict.fromkeys(map(str, partitions), snapshot_id)
+    todo = set(store.pending_partitions(stamps, run_spec)[0])
     done: list[str] = []
-    for p in todo:
+    for p in (p for p in partitions if str(p) in todo):
         part_df = df.where(F.col(partition_key) == F.lit(p))
         metrics = per_partition_job(part_df, p) or {}
         payload = None
@@ -292,14 +226,28 @@ def merged_stats_from_lineage(
     stamps: dict[str, str] | None = None,
 ):
     """Global statistics rebuilt purely from checkpointed sketch state
-    (no input rescan): merge of every committed partition's sketch rows
-    (filtered by a global snapshot, per-partition stamps, or latest).
-    Returns the sketches.merge_sketches frame (column, rows, n,
-    coverage, mean, stddev, min, max, ndv, hist, edges)."""
+    (no input rescan): merge of the committed partitions' sketch rows,
+    under per-partition ``stamps`` or one global ``snapshot_id`` (the
+    resume rule), else of every partition's latest row. Returns the
+    sketches.merge_sketches frame (column, rows, n, coverage, mean,
+    stddev, min, max, ndv, hist, edges)."""
     from gate_spark import sketches as sk
 
-    payload, _ = store.sketch_state(run_spec, snapshot_id, stamps)
+    latest = store._latest(run_spec)
+    if stamps is None:
+        stamps = {p: snapshot_id or r["snapshot_id"] for p, r in latest.items()}
+    payload = {
+        p: r["sketch_json"]
+        for p, r in _committed(stamps, latest).items()
+        if r["sketch_json"] is not None
+    }
     return sk.merge_sketches(sk.sketches_from_json(store.spark, payload))
+
+
+def _committed(stamps: Mapping[str, str], latest: dict[str, Row]) -> dict[str, Row]:
+    """The resume rule: a partition is committed iff its latest
+    completed row carries its current stamp."""
+    return {p: r for p, r in latest.items() if stamps.get(p) == r["snapshot_id"]}
 
 
 SUMMARY_FORMAT = 1

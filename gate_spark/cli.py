@@ -13,12 +13,16 @@ The SparkSession is taken from spark-submit's conf (no master override
 here); ``--local-cores N`` exists for ad-hoc ``python -m gate_spark``
 runs outside spark-submit. The job:
 
-1. reads the input (Iceberg table id or parquet path —
-   ``iceberg.read_table`` dispatch) and stamps its snapshot;
-2. with ``--lineage``, resumes: partitions already committed for this
-   (run-spec, snapshot) are pruned OUT of the input scan (pushed-down
-   isin filter → partition pruning), so a restarted 10^12-row run
-   rescans nothing it already validated. Pruning does NOT narrow the
+1. reads the input (Iceberg table id, or parquet path or URI —
+   ``iceberg.read_table`` dispatch) and stamps it: one map from each
+   partition to its current stamp (its own content stamp on a
+   hive-partitioned path, else the global snapshot);
+2. with ``--lineage``, resumes on one lineage read
+   (``CheckpointStore.pending_partitions``): a partition whose latest
+   committed row for this run spec carries its current stamp is
+   pruned OUT of the input scan (pushed-down isin filter → partition
+   pruning), so a restarted 10^12-row run rescans nothing it already
+   validated; every other partition is pending. Pruning does NOT narrow the
    global checks: doc_id uniqueness probes pending keys against the
    committed partitions' ids too (a column-pruned id-only scan — no
    token-array decode; ``--no-global-unique`` opts out), and with
@@ -34,8 +38,8 @@ runs outside spark-submit. The job:
    drift to ``--output`` — per-partition dirs with dynamic partition
    overwrite, so a resumed run replaces only the partitions it
    re-validated and the output always reflects the whole table;
-4. commits per-partition lineage rows (snapshot-id, partition spec,
-   metrics, and with ``--sketch`` the mergeable sketch state
+4. commits per-partition lineage rows (the stamp map's snapshot-id,
+   partition spec, metrics, and with ``--sketch`` the mergeable sketch state
    (gate_spark/sketches.py) that lets ``merged_stats_from_lineage``
    rebuild global statistics with zero rescan, plus the partition's
    summary rows that a later resume scores drift on);
@@ -100,18 +104,15 @@ def _drop_partition_dirs(
 ) -> None:
     """Delete ``{base}/{col}={p}`` for each partition — Hadoop
     FileSystem API, so it works on local paths, HDFS and s3a alike."""
-    if not parts:
-        return
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
+    from gate_spark.iceberg import hadoop_fs
+
     for p in parts:
         # Spark percent-escapes special characters in partition dir
         # names (Hive path convention) — build the same escaped name or
         # stale dirs for such values are silently left in place
-        path = jvm.org.apache.hadoop.fs.Path(
-            f"{base}/{_escape_path_name(spark, col)}={_escape_path_name(spark, p)}"
+        fs, path = hadoop_fs(
+            spark, f"{base}/{_escape_path_name(spark, col)}={_escape_path_name(spark, p)}"
         )
-        fs = path.getFileSystem(conf)
         if fs.exists(path):
             fs.delete(path, True)
 
@@ -152,23 +153,22 @@ def _get_session(args) -> SparkSession:
 def main(argv: list[str] | None = None) -> int:
     args = _build_parser().parse_args(argv)
     from gate_spark import checkpoint as ck
-    from gate_spark.iceberg import current_snapshot_id, read_table
+    from gate_spark import iceberg
     from gate_spark.pipeline import validate_tokens
     from gate_spark import sketches as sk
+    from gate_spark.operators.drift import _spark_keys
 
     spark = _get_session(args)
-    df = read_table(spark, args.input)
-    from gate_spark.iceberg import partition_snapshot_stamps
-
+    df = iceberg.read_table(spark, args.input)
     # per-partition stamps (hive-partitioned path input): an append to
     # one partition re-validates that partition alone
-    stamps = (
-        partition_snapshot_stamps(args.input, args.partition_key)
+    own_stamps = (
+        iceberg.partition_snapshot_stamps(args.input, args.partition_key)
         if args.snapshot == "auto"
         else {}
     )
     snapshot = (
-        current_snapshot_id(spark, args.input)
+        iceberg.current_snapshot_id(spark, args.input)
         if args.snapshot == "auto"
         else args.snapshot
     )
@@ -193,23 +193,18 @@ def main(argv: list[str] | None = None) -> int:
         str(r[0])
         for r in df.select(args.partition_key).distinct().orderBy(args.partition_key).collect()
     ]
-    if store is None:
-        pending = all_parts
-    elif stamps:
-        pending = store.pending_by_stamps(
-            {p: stamps[p] for p in all_parts if p in stamps}, run_spec
-        )
-        # partitions the reader sees but the dir listing does not
-        # (non-hive layout edge) fall back to the global stamp
-        pending += store.pending_partitions(
-            [p for p in all_parts if p not in stamps], run_spec, snapshot
-        )
-    else:
-        pending = store.pending_partitions(all_parts, run_spec, snapshot)
+    # each partition's current stamp: its own, else (no per-partition
+    # stamps, or a partition the dir listing does not show) the global
+    # snapshot. The resume rule and the commit both use this map.
+    stamps = {p: own_stamps.get(p, snapshot) for p in all_parts}
+    pending, committed_rows = (
+        store.pending_partitions(stamps, run_spec) if store else (all_parts, {})
+    )
     deferred = 0
     if args.max_partitions_per_run and len(pending) > args.max_partitions_per_run:
-        # deterministic batch choice (pending is sorted): the next
-        # invocation picks up exactly where this one's commit ends
+        # deterministic batch choice (pending keeps the ordered
+        # partition list's order): the next invocation picks up exactly
+        # where this one's commit ends
         deferred = len(pending) - args.max_partitions_per_run
         pending = pending[: args.max_partitions_per_run]
     summary_line = {
@@ -243,12 +238,11 @@ def main(argv: list[str] | None = None) -> int:
             external_keys = full_df.where(
                 F.col(args.partition_key).isin(committed)
             ).select(args.doc_id_col)
-        if store is not None and args.sketch:
-            payload, summaries = store.sketch_state(
-                run_spec, None if stamps else snapshot, stamps or None
+        if args.sketch:
+            payload, summaries = (
+                {p: r[f] for p, r in committed_rows.items() if r[f] is not None}
+                for f in ("sketch_json", "summary_json")
             )
-            payload = {p: s for p, s in payload.items() if p in committed}
-            summaries = {p: s for p, s in summaries.items() if p in committed}
             if summaries:
                 # the drift gate below counts the partitions that carry
                 # summary rows, which may be a subset of `committed`
@@ -292,18 +286,11 @@ def main(argv: list[str] | None = None) -> int:
     # which case the distribution verdicts silently fell back to
     # pending scope and reporting "drift" here would overstate them
     drift_global = history_sketches is not None and result.history_pooled
+    scope = [
+        s for s, on in (("unique", external_keys is not None), ("drift", drift_global)) if on
+    ]
     summary_line["global_checks"] = (
-        "full"
-        if not committed
-        else (
-            "unique"
-            if external_keys is not None and not drift_global
-            else (
-                "unique+drift"
-                if external_keys is not None
-                else ("drift" if drift_global else "pending-only")
-            )
-        )
+        ("+".join(scope) or "pending-only") if committed else "full"
     )
     out = args.output.rstrip("/")
     # per-partition dirs + dynamic overwrite: a resumed run replaces
@@ -375,10 +362,14 @@ def main(argv: list[str] | None = None) -> int:
                     hist_edges={args.n_tok_col: result.hist_edges},
                 )
             )
-            # a future resume scores drift on these (cached) rows
+            # a future resume scores drift on these rows, from the
+            # collect drift scoring already made; lineage keys are str()
+            # of the Spark values, which _spark_keys restores
+            pk = args.partition_key
+            pdf = result.summary.to_pandas()
+            keys = _spark_keys(pdf[pk], result.summary.df.schema[pk].dataType)
             summaries = ck.summary_to_json(
-                (r.asDict() for r in result.summary.df.collect()),
-                args.partition_key,
+                ({**r, pk: k} for k, r in zip(keys, pdf.to_dict("records"))), pk
             )
         store.mark_completed(
             pending,
@@ -388,7 +379,7 @@ def main(argv: list[str] | None = None) -> int:
             partition_spec=args.partition_key,
             sketches=payload,
             summaries=summaries,
-            snapshots=stamps or None,
+            snapshots=stamps,
         )
     result.unpersist()
     summary_line["status"] = "partial" if deferred else "completed"

@@ -14,7 +14,8 @@ so everything here degrades honestly:
   catalog and path reads to parquet;
 - :func:`current_snapshot_id` returns the live Iceberg snapshot id
   when available, else a deterministic **content stamp** over the
-  parquet data files (name/size/mtime digest) — so
+  parquet data files (name/size/mtime digest, listed through the
+  Hadoop FileSystem API, so any URI scheme works) — so
   ``checkpoint.CheckpointStore`` re-validates a partition when its
   data actually changed and skips it when only the run restarted,
   with or without Iceberg.
@@ -25,6 +26,7 @@ from __future__ import annotations
 import glob
 import hashlib
 import os
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -79,7 +81,7 @@ def read_table(spark: SparkSession, source: str) -> DataFrame:
     """Scan dispatch: a filesystem path reads as parquet; anything else
     is treated as a table identifier (Iceberg catalog table when the
     runtime is present, else the session catalog)."""
-    if os.path.sep in source or source.startswith("file:") or os.path.isdir(source):
+    if _is_path(source):
         return spark.read.parquet(source)
     if iceberg_available(spark):
         return spark.read.format("iceberg").load(source)
@@ -138,27 +140,58 @@ def write_table(
     return "table"
 
 
+def hadoop_fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path``: one code path for local
+    paths and ``file:``, ``hdfs:`` and ``s3a:`` URIs alike."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def _data_files(path: str) -> list[tuple[str, int, int]]:
+    """(name relative to ``path``, size, mtime in ms) of every parquet
+    data file under ``path`` (a directory, recursively, or one file),
+    listed through the active session's :func:`hadoop_fs`. Names
+    starting with ``_`` or ``.`` are skipped, as Spark's reader skips
+    them. ``listStatus``, not ``listFiles``: the local file system's
+    located statuses read each file's permissions, one subprocess per
+    file without the native Hadoop library."""
+    fs, root = hadoop_fs(SparkSession.active(), path)
+    if not fs.exists(root):
+        return []
+    out = []
+
+    def walk(statuses, prefix):
+        for st in statuses:
+            name = st.getPath().getName()
+            if name.startswith(("_", ".")):
+                continue
+            if st.isDirectory():
+                walk(fs.listStatus(st.getPath()), f"{prefix}{name}/")
+            elif name.endswith(".parquet"):
+                out.append((prefix + name, st.getLen(), st.getModificationTime()))
+
+    walk(fs.listStatus(root), "")
+    return sorted(out)
+
+
+def _stamp(files: list[tuple[str, int, int]]) -> str:
+    h = hashlib.sha256()
+    for rel, size, mtime in files:
+        h.update(f"{rel}|{size}|{mtime}\n".encode())
+    return h.hexdigest()[:16]
+
+
 def parquet_snapshot_stamp(path: str) -> str:
     """Deterministic content stamp of a parquet directory: sha256 over
-    every data file's (relative name, size, mtime_ns). Changes iff the
+    every data file's (relative name, size, mtime). Changes iff the
     data changed — the parquet-world stand-in for an Iceberg snapshot
     id, cheap (pure metadata listing) even for very large tables.
-    Accepts a directory or a single parquet file."""
-    if os.path.isfile(path):
-        files = [path]
-        path = os.path.dirname(path)
-    else:
-        files = sorted(
-            glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        )
-        if not files:
-            raise ValueError(f"no parquet data files under {path!r}")
-    h = hashlib.sha256()
-    for f in files:
-        st = os.stat(f)
-        rel = os.path.relpath(f, path)
-        h.update(f"{rel}|{st.st_size}|{st.st_mtime_ns}\n".encode())
-    return h.hexdigest()[:16]
+    Accepts a directory or a single parquet file, as a path or any
+    Hadoop URI; lists through the active SparkSession."""
+    files = _data_files(path)
+    if not files:
+        raise ValueError(f"no parquet data files under {path!r}")
+    return _stamp(files)
 
 
 def partition_snapshot_stamps(path: str, partition_key: str) -> dict[str, str]:
@@ -168,18 +201,16 @@ def partition_snapshot_stamps(path: str, partition_key: str) -> dict[str, str]:
     partition changes ONE stamp, so an incremental run re-validates
     exactly the partitions whose data moved (the parquet analogue of
     diffing two Iceberg snapshots' partition-level file manifests).
-    Returns {} when the directory is not partitioned by that key."""
-    out: dict[str, str] = {}
+    Returns {} when the directory is not partitioned by that key.
+    Keys are the partition values: Spark percent-escapes special
+    characters in the directory names, and they are unescaped here."""
     prefix = f"{partition_key}="
-    try:
-        entries = sorted(os.listdir(path))
-    except (FileNotFoundError, NotADirectoryError):
-        return out
-    for d in entries:
-        full = os.path.join(path, d)
-        if d.startswith(prefix) and os.path.isdir(full):
-            out[d[len(prefix):]] = parquet_snapshot_stamp(full)
-    return out
+    per_part: dict[str, list] = {}
+    for rel, size, mtime in _data_files(path):
+        d, _, rest = rel.partition("/")
+        if rest and d.startswith(prefix):
+            per_part.setdefault(unquote(d[len(prefix):]), []).append((rest, size, mtime))
+    return {p: _stamp(files) for p, files in sorted(per_part.items())}
 
 
 def current_snapshot_id(
@@ -188,7 +219,7 @@ def current_snapshot_id(
     """Snapshot stamp for checkpoint lineage: the Iceberg table's
     current snapshot id when the runtime + a table identifier are
     available, else the parquet content stamp of the path."""
-    if os.path.sep in source or os.path.isdir(source):
+    if _is_path(source):
         return parquet_snapshot_stamp(source)
     if iceberg_available(spark):
         row = (

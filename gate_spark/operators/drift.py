@@ -334,7 +334,7 @@ def detect_drift(
     uses all history).
     """
     pk = summary.partition_key
-    pdf = summary.df.toPandas()
+    pdf = summary.to_pandas()
     partitions = _ordered_partitions(pdf[pk])
     if current_partition is None:
         current_partition = partitions[-1]
@@ -438,7 +438,7 @@ def drift_scores(
     """
     pk = summary.partition_key
     statistics = summary.statistics()
-    pdf = summary.df.toPandas()
+    pdf = summary.to_pandas()
     if history is not None and len(history):
         pdf = pd.concat(
             [pdf[[pk, "column"] + statistics], history[[pk, "column"] + statistics]],
@@ -478,7 +478,7 @@ def drifted_columns_df(
     Eager: the summary is collected once at call time (no streaming
     input)."""
     pk = summary.partition_key
-    z = zscore_summary(summary.df.toPandas(), pk, summary.statistics())
+    z = zscore_summary(summary.to_pandas(), pk, summary.statistics())
     cur = z[z[pk] == current_partition][["column", "statistic", "value"]]
     pairs = z[["column", "statistic"]].drop_duplicates()
     cur = pairs.merge(cur, on=["column", "statistic"], how="left")
@@ -520,7 +520,7 @@ def cluster_reduced_z(
     Eager: the summary is collected once at call time (no streaming
     input)."""
     pk = summary.partition_key
-    z = zscore_summary(summary.df.toPandas(), pk, summary.statistics())
+    z = zscore_summary(summary.to_pandas(), pk, summary.statistics())
     if clustering is None:
         names = sorted(z["column"].unique())
         clustering = {c: i % num_clusters for i, c in enumerate(names)}

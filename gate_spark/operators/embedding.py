@@ -55,6 +55,7 @@ def embedding_summary(
     quantile_mode: str = "approx",
     accuracy: int = 10000,
     compute_examples: bool = True,
+    sketch_k: int = 200,
 ) -> tuple[DataFrame, dict[str, int], dict, dict]:
     """Per-dimension coverage/mean/p50/p95 for each embedding value
     column, long format with column names ``{value_col}_{i}``.
@@ -83,25 +84,28 @@ def embedding_summary(
             )
             .withColumn("_val", F.col("_val").cast("double"))
         )
-        if quantile_mode == "nearest":
-            # exact polars-"nearest" parity (oracle-checkable): quantile
-            # over (partition, dim) pairs via the shared rank cascade.
+        if quantile_mode in ("nearest", "sketch"):
+            # per-(partition, dim) pairs through the scalar summary's
+            # value-keyed machinery: exact polars-"nearest" parity
+            # (oracle-checkable) or the KLL mergeable sketch
+            from gate_spark.kll import kll_quantiles_from_pairs
             from gate_spark.operators.summarize import nearest_rank_quantiles_from_pairs
 
-            per_dim = exploded.groupBy(partition_key, "_pos").agg(
-                F.avg("_val").alias("mean")
+            pairs = exploded.select(partition_key, "_pos", F.col("_val").alias("value"))
+            keys, qs = [partition_key, "_pos"], (0.5, 0.95)
+            qdf = (
+                nearest_rank_quantiles_from_pairs(pairs, keys, qs)
+                if quantile_mode == "nearest"
+                else kll_quantiles_from_pairs(pairs, keys, qs, k=sketch_k)
             )
-            qdf = nearest_rank_quantiles_from_pairs(
-                exploded.select(partition_key, "_pos", F.col("_val").alias("value")),
-                [partition_key, "_pos"],
-                (0.5, 0.95),
-            )
-            per_dim = per_dim.join(qdf, [partition_key, "_pos"]).select(
-                partition_key,
-                "_pos",
-                "mean",
-                F.col("_p50").alias("p50"),
-                F.col("_p95").alias("p95"),
+            per_dim = (
+                exploded.groupBy(partition_key, "_pos")
+                .agg(F.avg("_val").alias("mean"))
+                .join(qdf, keys)
+                .select(
+                    partition_key, "_pos", "mean",
+                    F.col("_p50").alias("p50"), F.col("_p95").alias("p95"),
+                )
             )
         else:
             if quantile_mode == "linear":

@@ -132,6 +132,7 @@ class Summary:
     embedding_dims: dict[str, int] = field(default_factory=dict)
     examples: dict = field(default_factory=dict)  # (partition, key_col) -> pandas
     centroids: dict = field(default_factory=dict)  # (partition, key_col) -> ndarray
+    _collected: tuple = field(default=(None, None), init=False, repr=False, compare=False)
 
     def statistics(self) -> list[str]:
         return list(self.statistics_list)
@@ -160,6 +161,15 @@ class Summary:
     def partitions(self) -> list:
         rows = self.df.select(self.partition_key).distinct().orderBy(self.partition_key).collect()
         return [r[0] for r in rows]
+
+    def to_pandas(self):
+        """The summary table as pandas, collected once per ``df`` (the
+        table is persisted and metadata-scale), so the driver-side
+        consumers of one run (drift scoring, the CLI's lineage commit)
+        share one collect. Treat the frame as read-only."""
+        if self._collected[0] is not self.df:
+            self._collected = (self.df, self.df.toPandas())
+        return self._collected[1]
 
     def unpersist(self) -> None:
         """Release the cached summary table (summarize() persists it:
@@ -216,6 +226,10 @@ def _validate(
     return requested, emap, partition_key
 
 
+QUANTILE_MODES = ("approx", "nearest", "linear", "sketch")
+OCC_VALUE_MODES = ("exact", "hash")
+
+
 def summarize(
     df: DataFrame,
     columns: Sequence[str] | None = None,
@@ -255,6 +269,12 @@ def summarize(
     meaningless; exclude them and the digests that remain (bounded
     domains like token lengths) stay small and merge in milliseconds.
     """
+    for name, mode, accepted in (
+        ("quantile_mode", quantile_mode, QUANTILE_MODES),
+        ("occ_value_mode", occ_value_mode, OCC_VALUE_MODES),
+    ):
+        if mode not in accepted:
+            raise ValueError(f"{name}={mode!r}; accepted: {', '.join(accepted)}")
     requested, emap, partition_key = _validate(
         df, columns, embedding_column_map, partition_key, previous
     )
@@ -301,6 +321,7 @@ def summarize(
             quantile_mode=quantile_mode,
             accuracy=accuracy,
             compute_examples=compute_embedding_examples,
+            sketch_k=sketch_k,
         )
         # align to the scalar summary's column set
         for s in stats_order:

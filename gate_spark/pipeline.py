@@ -116,9 +116,10 @@ def validate_tokens(
       pending data's min/max — shared edges make histograms mergeable
       across runs.
     - ``history_sketches``: sketches.SKETCH_SCHEMA rows for committed
-      partitions (from checkpoint.CheckpointStore.sketch_state). PSI/KS
-      then pools the committed partitions' fixed-edge histograms into
-      the holdout.
+      partitions (their lineage rows' ``sketch_json``, as
+      checkpoint.CheckpointStore.pending_partitions returns them).
+      PSI/KS then pools the committed partitions' fixed-edge histograms
+      into the holdout.
     - ``history_summary``: the committed partitions' summary rows
       (pandas, summary format — checkpoint.summary_from_json of the
       lineage's summary_json). Drift then scores pending partitions

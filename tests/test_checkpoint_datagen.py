@@ -74,6 +74,30 @@ def test_checkpoint_resume(spark, tmp_path):
     assert len(lin) == len(parts) + 2
 
 
+def test_checkpoint_latest_row_decides(spark, tmp_path):
+    """One resume rule: a partition is committed iff its latest
+    completed row carries its current stamp. Going back from snapshot T
+    to an earlier S re-validates (the outputs hold T's verdicts), and a
+    store addressed by a ``file:`` URI that does not exist yet reads as
+    empty, then resumes."""
+    store = CheckpointStore(spark, "file://" + str(tmp_path / "lineage"))
+    parts = ["p0", "p1"]
+
+    def pending(stamps):
+        return store.pending_partitions(stamps, "rs")[0]
+
+    assert pending(dict.fromkeys(parts, "S")) == parts
+    store.mark_completed(parts, "rs", "S")
+    assert pending(dict.fromkeys(parts, "S")) == []
+    store.mark_completed(parts, "rs", "T")
+    assert pending(dict.fromkeys(parts, "T")) == []
+    assert pending(dict.fromkeys(parts, "S")) == parts
+    # per-partition stamps take the same rule, partition by partition
+    assert pending({"p0": "T", "p1": "S"}) == ["p1"]
+    _, committed = store.pending_partitions({"p0": "T", "p1": "S"}, "rs")
+    assert {p: r["snapshot_id"] for p, r in committed.items()} == {"p0": "T"}
+
+
 def test_multimodal_plumbing(spark):
     import hashlib
 

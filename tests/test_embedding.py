@@ -56,6 +56,24 @@ def test_embedding_summary_shape(random_embeddings):
     assert pdf["num_unique_values"].isna().all()
 
 
+def test_embedding_sketch_mode_is_kll(random_embeddings):
+    """``quantile_mode="sketch"`` takes embedding dimensions through the
+    KLL sketch: with ``sketch_k`` above a group's row count the sketch
+    never compacts, so p50/p95 equal nearest-rank's bit for bit
+    (percentile_approx would pick the lower rank)."""
+    def quantiles(mode):
+        s = summarize(
+            random_embeddings, embedding_column_map={"key": "emb"},
+            partition_key="date", compute_embedding_examples=False,
+            quantile_mode=mode, sketch_k=512,
+        )
+        pdf = s.value()[["date", "column", "p50", "p95"]]
+        s.unpersist()
+        return pdf
+
+    pd.testing.assert_frame_equal(quantiles("sketch"), quantiles("nearest"))
+
+
 def test_random_embeddings_not_drifted(random_embeddings):
     """reference tests/test_embedding.py:12-31 (statistical — uniform
     i.i.d. partitions should not flag)."""

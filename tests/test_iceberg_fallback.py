@@ -17,6 +17,7 @@ from gate_spark import (
     read_table,
 )
 from gate_spark.checkpoint import CheckpointStore
+from gate_spark.iceberg import partition_snapshot_stamps
 
 
 def test_detection_degrades_gracefully(spark):
@@ -56,7 +57,7 @@ def test_checkpoint_invalidation_via_stamp(spark, tmp_path):
     store = CheckpointStore(spark, lineage)
     snap1 = current_snapshot_id(spark, data)
     store.mark_completed(["src0", "src1"], run_spec="rs1", snapshot_id=snap1)
-    assert store.pending_partitions(["src0", "src1"], "rs1", snap1) == []
+    assert store.pending_partitions(dict.fromkeys(["src0", "src1"], snap1), "rs1")[0] == []
 
     time.sleep(0.01)
     spark.createDataFrame([(99, "src0")], ["id", "source"]).write.partitionBy(
@@ -65,10 +66,22 @@ def test_checkpoint_invalidation_via_stamp(spark, tmp_path):
     snap2 = current_snapshot_id(spark, data)
     assert snap2 != snap1
     # data changed -> both partitions re-validate under the new stamp
-    assert store.pending_partitions(["src0", "src1"], "rs1", snap2) == [
+    assert store.pending_partitions(dict.fromkeys(["src0", "src1"], snap2), "rs1")[0] == [
         "src0",
         "src1",
     ]
+
+
+def test_partition_stamps_keyed_by_value(spark, tmp_path):
+    """Spark percent-escapes special characters in partition directory
+    names; the stamps are keyed by the values the reader returns, so
+    such a partition gets its own stamp instead of the global one."""
+    data = str(tmp_path / "esc")
+    spark.createDataFrame(
+        [(1, "a:b c%"), (2, "plain")], "id int, source string"
+    ).write.partitionBy("source").parquet(data)
+    values = {r[0] for r in spark.read.parquet(data).select("source").distinct().collect()}
+    assert set(partition_snapshot_stamps(data, "source")) == values == {"a:b c%", "plain"}
 
 
 def test_write_table_dispatch_both_branches(spark, tmp_path):

@@ -5,25 +5,33 @@ KLL rank-error and merge-order invariance, percentile_of_score's
 scipy-rank semantics, histogram-quantile monotonicity/bounds, the
 nearest-rank rule, the PSI/KS kernel's identities and bounds, the
 z-score kernel and kNN scorer behind every drift entry point, and the
-lineage summary_json round trip. No SparkSession — the kernels run driver-side or inside Arrow batches, so
-the properties hold wherever they execute.
+lineage summary_json round trip. No SparkSession — the kernels run
+driver-side or inside Arrow batches, so the properties hold wherever
+they execute. The exception is the generated-SQL builders
+(``_sql_lit``, ``_qident``), checked against the Column API in the
+session: one query per example, with bounded ``max_examples``.
 """
 
 from __future__ import annotations
 
+import datetime as dt
+import decimal
 import json
+import math
 
 import numpy as np
 import pandas as pd
 import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gate_spark.checkpoint import summary_from_json, summary_to_json
 from gate_spark.kernels import percentile_of_score, psi_ks, zscore_groups
 from gate_spark.operators.drift import Z_EPS, _knn_scores
 from gate_spark.kll import KLLSketch
+from gate_spark.operators.summarize import _qident, _sql_lit
 from gate_spark.sketches import quantiles_from_hist
 
 floats = st.floats(
@@ -345,3 +353,68 @@ def test_summary_json_unknown_format_raises():
     for blob in (json.dumps({"format": 2, "rows": rows}), json.dumps(rows)):
         with pytest.raises(ValueError, match="src3"):
             summary_from_json({"src3": blob}, "source", T.StringType())
+
+
+# ------------------------------------------------- generated-SQL builders
+
+_INT_EDGES = [0, -1, 2**31 - 1, 2**31, -(2**31), -(2**31) - 1,
+              2**63 - 1, 2**63, -(2**63), -(2**63) - 1, 2**70, -(2**70)]
+_odd_text = st.text(
+    st.one_of(st.sampled_from("'\"\\`.$ é名🙂\n\t"), st.characters(blacklist_categories=("Cs",))),
+    max_size=12,
+)
+sql_values = st.one_of(
+    st.none(),
+    st.booleans(),
+    st.sampled_from(_INT_EDGES),
+    st.integers(min_value=-(2**100), max_value=2**100),
+    st.floats(allow_nan=True, allow_infinity=True),
+    st.sampled_from([float("nan"), float("inf"), float("-inf"), -0.0]),
+    _odd_text,
+    st.decimals(allow_nan=False, allow_infinity=False, places=4,
+                min_value=-(10**20), max_value=10**20),
+    # the Column API's date converter cannot format years before 1000
+    st.dates(min_value=dt.date(1000, 1, 1)),
+    st.datetimes(min_value=dt.datetime(1900, 1, 1), max_value=dt.datetime(2200, 1, 1)),
+)
+
+
+def _same(a, b) -> bool:
+    if isinstance(a, float) and isinstance(b, float):
+        return a == b and math.copysign(1, a) == math.copysign(1, b) or (a != a and b != b)
+    return type(a) is type(b) and a == b
+
+
+@settings(max_examples=30, deadline=None)
+@given(values=st.lists(sql_values, min_size=1, max_size=12))
+def test_sql_lit_matches_column_lit(spark, values):
+    """``F.expr(_sql_lit(v))`` has the type and value of ``F.lit(v)``:
+    None, bools, ints at the int32/int64 edges and past 64 bits, NaN,
+    ±inf, -0.0, strings with quotes, backslashes, backticks and
+    unicode, Decimal, date and datetime. ``F.lit`` cannot take an int
+    past 64 bits, so those compare with ``F.lit(Decimal(v))``. One query
+    per example."""
+    def column_lit(v):
+        wide = isinstance(v, int) and not isinstance(v, bool) and not -(2**63) <= v < 2**63
+        return F.lit(decimal.Decimal(v) if wide else v)
+
+    df = spark.range(1).select(
+        *[F.expr(_sql_lit(v)).alias(f"e{i}") for i, v in enumerate(values)],
+        *[column_lit(v).alias(f"l{i}") for i, v in enumerate(values)],
+    )
+    row = df.first()
+    for i, v in enumerate(values):
+        assert df.schema[f"e{i}"].dataType == df.schema[f"l{i}"].dataType, v
+        assert _same(row[f"e{i}"], row[f"l{i}"]), v
+
+
+@settings(max_examples=20, deadline=None)
+@given(names=st.lists(st.text(st.sampled_from("`. a_é名'\\-"), min_size=1, max_size=6),
+                      min_size=1, max_size=8, unique_by=str.lower))
+def test_qident_resolves_odd_column_names(spark, names):
+    """``selectExpr(_qident(name))`` resolves column names holding
+    backticks, spaces, dots, quotes and unicode. One query per example."""
+    df = spark.range(1).select(*[F.lit(i).alias(n) for i, n in enumerate(names)])
+    out = df.selectExpr(*[_qident(n) for n in reversed(names)])
+    assert out.columns == list(reversed(names))
+    assert list(out.first()) == list(reversed(range(len(names))))

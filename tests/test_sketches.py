@@ -137,7 +137,8 @@ def test_interrupted_run_resumes_and_merges_globally(spark, docs, tmp_path):
         )
     except Boom:
         pass
-    assert 3 <= len(store.completed_partitions("rs", "snap1")) < len(parts)
+    _, committed = store.pending_partitions(dict.fromkeys(parts, "snap1"), "rs")
+    assert 3 <= len(committed) < len(parts)
 
     processed.clear()
     done = resumable_run(
@@ -146,7 +147,7 @@ def test_interrupted_run_resumes_and_merges_globally(spark, docs, tmp_path):
         sketch_columns=["n_chars", "doc_id"],
     )
     assert set(done).isdisjoint(parts[:3])  # completed work not redone
-    assert store.pending_partitions(parts, "rs", "snap1") == []
+    assert store.pending_partitions(dict.fromkeys(parts, "snap1"), "rs")[0] == []
 
     g = {
         r["column"]: r
@@ -161,7 +162,7 @@ def test_interrupted_run_resumes_and_merges_globally(spark, docs, tmp_path):
 
 def test_old_lineage_schema_still_reads(spark, tmp_path):
     """Stores written before partition_spec/sketch_json/summary_json
-    existed read as nulls — completion queries and sketch_state degrade
+    existed read as nulls — the lineage read and its payloads degrade
     gracefully."""
     path = str(tmp_path / "old")
     spark.createDataFrame(
@@ -170,13 +171,25 @@ def test_old_lineage_schema_still_reads(spark, tmp_path):
         " status string, metrics_json string, ts double",
     ).write.parquet(path)
     store = CheckpointStore(spark, path)
-    assert store.completed_partitions("rs", "snap") == {"p0"}
-    assert store.sketch_state("rs", "snap") == ({}, {})
+    stamps = {"p0": "snap", "p1": "snap"}
+
+    def committed():
+        return set(store.pending_partitions(stamps, "rs")[1])
+
+    def payloads():
+        _, rows = store.pending_partitions(stamps, "rs")
+        return tuple(
+            {p: r[f] for p, r in rows.items() if r[f] is not None}
+            for f in ("sketch_json", "summary_json")
+        )
+
+    assert committed() == {"p0"}
+    assert payloads() == ({}, {})
     store.mark_completed(
         ["p1"], "rs", "snap", partition_spec="source", sketches={"p1": "[]"}
     )
-    assert store.completed_partitions("rs", "snap") == {"p0", "p1"}
-    assert store.sketch_state("rs", "snap") == ({"p1": "[]"}, {})
+    assert committed() == {"p0", "p1"}
+    assert payloads() == ({"p1": "[]"}, {})
 
 
 # ----------------------------------------------------------- KLL sketch

@@ -179,6 +179,54 @@ def test_cli_per_partition_incremental(spark, tmp_path, capsys):
     assert viol.where(viol.key == stolen).count() >= 1
 
 
+def _cli_runner(capsys, base_args):
+    from gate_spark.cli import main
+
+    def run(extra=()):
+        assert main([*base_args, "--local-cores", "8", *extra]) == 0
+        line = [l for l in capsys.readouterr().out.splitlines() if l.startswith("{")][-1]
+        return json.loads(line)
+
+    return run
+
+
+def test_cli_file_uris_resume(spark, tmp_path, capsys):
+    """``file:`` URIs for the input and the lineage store: the stamps
+    and the lineage read go through Hadoop's FileSystem API, so the
+    second run finds every partition committed."""
+    from gate_spark.datagen import write_token_table
+
+    data = str(tmp_path / "tok")
+    write_token_table(spark, data, 2000, num_partitions=2)
+    run = _cli_runner(capsys, [
+        "--input", "file://" + data, "--output", "file://" + str(tmp_path / "out"),
+        "--lineage", "file://" + str(tmp_path / "lineage"), "--no-drift",
+    ])
+    first = run()
+    assert first["status"] == "completed" and first["pending"] == 20
+    second = run()
+    assert second["status"] == "up-to-date" and second["pending"] == 0
+
+
+def test_cli_snapshot_back_and_forth_revalidates(spark, tmp_path, capsys):
+    """``--snapshot S``, then ``T``, then ``S`` again: the third run
+    re-validates every partition, because the outputs hold T's verdicts
+    (the latest lineage row decides)."""
+    from gate_spark.datagen import write_token_table
+
+    data = str(tmp_path / "tok")
+    write_token_table(spark, data, 2000, num_partitions=2)
+    run = _cli_runner(capsys, [
+        "--input", data, "--output", str(tmp_path / "out"),
+        "--lineage", str(tmp_path / "lineage"), "--no-drift",
+    ])
+    assert run(["--snapshot", "S"])["pending"] == 20
+    assert run(["--snapshot", "S"])["status"] == "up-to-date"
+    assert run(["--snapshot", "T"])["pending"] == 20
+    third = run(["--snapshot", "S"])
+    assert third["status"] == "completed" and third["pending"] == 20
+
+
 def test_cli_max_partitions_per_run(spark, tmp_path, capsys):
     """Bounded failure domain: --max-partitions-per-run M validates at
     most M pending partitions per invocation and commits their lineage,

@@ -68,6 +68,15 @@ def test_missing_columns(tiny_df):
         summarize(tiny_df, partition_key="grp")
 
 
+def test_unknown_modes_raise(tiny_df):
+    """A mode summarize does not implement fails naming the accepted
+    values, instead of silently running another mode."""
+    with pytest.raises(ValueError, match="approx, nearest, linear, sketch"):
+        summarize(tiny_df, columns=["int_col"], partition_key="grp", quantile_mode="exact")
+    with pytest.raises(ValueError, match="exact, hash"):
+        summarize(tiny_df, columns=["int_col"], partition_key="grp", occ_value_mode="approx")
+
+
 def test_previous_schema_inheritance(tiny_df, tiny_df_2):
     """reference tests/test_summary.py:57-65."""
     s = summarize(tiny_df, columns=["string_col", "int_col", "float_col"],
